@@ -245,7 +245,7 @@ def run_suite(spark, sf_dir: str, cpus: int, names=None,
         # SCAN split floor: keep the Spark default (4 MB open cost).
         # r11 briefly lowered it to 256 KB so compute-heavy scans of
         # small-in-bytes tables split to ~cores tasks, but the
-        # interleaved A/B at sf3 (scripts/probe_opencost.py) measured
+        # interleaved A/B at sf3 (OPTIMIZATION_r11.md) measured
         # the 4 MB floor faster or equal for EVERY headline query —
         # including the compute-heavy ones the change targeted
         # (dedup_minhash 2.50 vs 2.69 s, text_fingerprint 0.78 vs

@@ -17,6 +17,13 @@ Five families, all shuffle-minimal:
 
 All built on functions/text.py Catalyst expressions — signature
 computation is embarrassingly parallel map-side work.
+
+The graph family that turns duplicate pairs into clusters and ranks
+(``connected_components``, ``pagerank_fixed_point``) runs as vertex
+programs on the fixpoint engine (``operators/fixpoint.py``), like the
+iterative operators in ``operators/graph.py``.  ``alternating_cc``
+keeps its own two legs: its star contraction rewrites the edge set
+each round, which is not a vertex program.
 """
 
 from __future__ import annotations
@@ -25,6 +32,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geohub_data_pipeline_spark.functions import text as T
+from geohub_data_pipeline_spark.operators.fixpoint import (
+    MinPlus, Rank, vertex_fixpoint,
+)
 from geohub_data_pipeline_spark.operators.skew import (
     fits_one_task as _fits_one_task,
     rebalance_for_compute,
@@ -232,6 +242,10 @@ def jaccard_consecutive(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         )
     )
 
+
+# Graph operators.  ``_fits_one_task`` is looked up per call: tests and
+# the benchmark's leg recorder wrap it.
+
 def connected_components(edges: DataFrame, src: str = "id_a",
                          dst: str = "id_b",
                          max_iters: int = 20) -> DataFrame:
@@ -244,17 +258,16 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     neighbors; converged when no label changes (<= graph-diameter
     rounds — near-dup clusters are shallow, so this is small).
 
-    Scale: per round, one join of the edge list with the label table
-    plus a min-aggregation — both keyed shuffles on node ids;
-    ``localCheckpoint`` truncates lineage so round i does not replan
-    rounds 1..i-1.  The convergence probe is a ``limit(1).count()``
-    (stops at the first changed row).  For graphs with huge diameter
-    or heavy skew, the large-star/small-star variant halves rounds —
-    not needed for dedup clusters.
+    The min-label program on the fixpoint engine: only the nodes
+    whose label dropped last round send, so late rounds move only
+    the shrinking frontier.  Raises if labels still change after
+    ``max_iters`` rounds.  For graphs with huge diameter the
+    large-star/small-star variant (``alternating_cc``) needs fewer
+    rounds — not needed for dedup clusters.
 
     Returns (node, label) where label = min node id of the component.
     """
-    # materialize once: the edge list is re-joined every round, and its
+    # materialize once: the engine's blocks are built from it, and its
     # lineage may be an expensive pipeline (LSH candidates + verify)
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -263,68 +276,16 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         .distinct()
         .localCheckpoint()
     )
-    if _fits_one_task(sym):
-        # r12 in-task fixpoint (the halo-engine P=1 pattern, guide
-        # §1.2): when the materialized pair list landed in ONE
-        # partition, each hash-to-min round's 2-stage job exchanges
-        # with itself while paying the dispatch floor (measured:
-        # dedup_cluster_canonical 35 jobs / 4.4 s at sf0.01).  Same
-        # synchronous min-label rounds, same max_iters cap, all
-        # integer — bit-identical labels, pinned by a forced-
-        # distributed parity pytest.  At real scale the pair list
-        # spans many partitions and the loop below runs unchanged.
-        cap = int(max_iters)
+    return vertex_fixpoint(sym, MinPlus("label"), max_iters,
+                           _fits_one_task(sym),
+                           f"connected_components max_iters={max_iters}")
 
-        def _run(it):
-            import pandas as pd
 
-            adj: dict = {}
-            for pdf in it:
-                for u, v in zip(pdf["u"].to_numpy(),
-                                pdf["v"].to_numpy()):
-                    adj.setdefault(int(u), []).append(int(v))
-            lab = {u: u for u in adj}
-            for _ in range(cap):
-                changed = False
-                new = {}
-                for n, vs in adj.items():
-                    m = min(lab[v] for v in vs)
-                    nl = lab[n] if lab[n] <= m else m
-                    new[n] = nl
-                    changed = changed or nl != lab[n]
-                lab = new
-                if not changed:
-                    break
-            yield pd.DataFrame({"node": list(lab),
-                                "label": list(lab.values())},
-                               dtype="int64")
-
-        return sym.mapInPandas(_run, "node long, label long")
-    labels = (sym.select(F.col("u").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint())
-    for _ in range(max_iters):
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "v"), "v")
-            .groupBy("u").agg(F.min("label").alias("__nbr"))
-            .withColumnRenamed("u", "node")
-        )
-        new = (
-            labels.join(nbr, "node", "left")
-            .select("node",
-                    F.least(F.col("label"),
-                            F.coalesce(F.col("__nbr"), F.col("label")))
-                    .alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new.join(labels.withColumnRenamed("label", "__old"), "node")
-            .filter(F.col("label") != F.col("__old")).limit(1).count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    return labels
+def _altcc_cap(cap) -> RuntimeError:
+    return RuntimeError(
+        f"alternating_cc max_iters={cap}: the fixpoint did not converge "
+        f"— one round past the cap still changed the star edge set, so "
+        f"the result would be truncated; raise the cap")
 
 
 def alternating_cc(edges: DataFrame, src: str = "id_a",
@@ -374,7 +335,7 @@ def alternating_cc(edges: DataFrame, src: str = "id_a",
     )
 
     if _fits_one_task(e):
-        # r12 in-task fixpoint (see connected_components): identical
+        # in-task leg (the edge set sits in one partition): identical
         # large-star / small-star round schedule over Python sets —
         # distinct-row semantics ARE set semantics, every quantity an
         # integer, so the star fixpoint is bit-identical (pinned by a
@@ -392,7 +353,7 @@ def alternating_cc(edges: DataFrame, src: str = "id_a",
                 E.update((int(a), int(b)) for a, b in
                          zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()))
             prev = None
-            for _ in range(cap):
+            for _ in range(cap + 1):
                 sym_l = E | {(b, a) for a, b in E}
                 mn: dict = {}
                 for su, sv in sym_l:
@@ -421,6 +382,8 @@ def alternating_cc(edges: DataFrame, src: str = "id_a",
                 if prev is not None and E == prev:
                     break
                 prev = E
+            else:
+                raise _altcc_cap(cap)
             us = [a for a, _ in E]
             vs = [b for _, b in E]
             yield pd.DataFrame({"u": us, "v": vs}, dtype="int64")
@@ -428,7 +391,7 @@ def alternating_cc(edges: DataFrame, src: str = "id_a",
         e = e.mapInPandas(_run, "u long, v long")
     else:
         prev = None
-        for _ in range(max_iters):
+        for _ in range(int(max_iters) + 1):
             # large-star: group the full (symmetric) neighborhood of
             # u, link each v > u to min(N(u) + {u})
             # collision-free aliases throughout: re-using the u/v names
@@ -478,6 +441,8 @@ def alternating_cc(edges: DataFrame, src: str = "id_a",
             ):
                 break
             prev = e
+        else:
+            raise _altcc_cap(max_iters)
     # fixpoint edges are (node, component-min) stars; roots label
     # themselves, as do any isolated self-loop inputs
     return (
@@ -774,80 +739,26 @@ def pagerank_fixed_point(edges: DataFrame, n_iters: int = 3,
     with no out-edges contribute nothing), the common simplified
     form; R0 = scale for every node.
 
-    Plan per iteration: one broadcast-or-shuffle join of the rank
-    vector (O(V)) against the edge list keyed by src, one groupBy(dst)
-    sum, one left join back to the vertex set for the teleport term.
-    Edges never move after their first hash partition on src; the
-    rank vector is the only thing that flows.  No driver collect,
-    no cartesian — the same plan at 100 TB just has a bigger edge
-    relation behind the same O(V) rank exchanges.
+    A fixed-round vertex program on the fixpoint engine: each round
+    every node sends ``rank div outdeg`` along its out-edges (summed
+    per sender block and cached at the receiver), and edges never
+    move after the blocks are built.
 
     Output: ``node long, rank_fp long`` (rank in scale-ths, all
     nodes present).
     """
-    # r12: materialize the deduped edge relation once — nodes, outdeg
-    # and every iteration's join all reference it, and the checkpoint
-    # both feeds the P=1 gate below and replaces re-planning the
-    # distinct subtree per reference (the exchange-reuse the lazy
-    # form relied on is an optimizer courtesy, not a contract)
+    # materialize the deduped edge relation once: the one-task gate
+    # reads its partition count and the engine builds its blocks
+    # from it
     e = (edges.select(F.col(src).cast("long").alias("s"),
                       F.col(dst).cast("long").alias("t"))
          .filter(F.col("s") != F.col("t"))
          .distinct()
          .localCheckpoint())
-    teleport = ((damping_den - damping_num) * scale) // damping_den
-    if _fits_one_task(e):
-        # in-task fixed-point (see connected_components): identical
-        # integer update — rank div outdeg per edge, grouped sum,
-        # teleport + damped div — so the emitted rows are
-        # bit-identical to the distributed loop's
-        sc0, it0 = int(scale), int(n_iters)
-        dn, dd = int(damping_num), int(damping_den)
-
-        def _run(it):
-            import pandas as pd
-
-            outs: dict = {}
-            nodes: set = set()
-            for pdf in it:
-                for s, t in zip(pdf["s"].to_numpy(),
-                                pdf["t"].to_numpy()):
-                    outs.setdefault(int(s), []).append(int(t))
-                    nodes.add(int(s))
-                    nodes.add(int(t))
-            ranks = {n: sc0 for n in nodes}
-            for _ in range(it0):
-                summed: dict = {}
-                for s, ts in outs.items():
-                    c = ranks[s] // len(ts)
-                    for t in ts:
-                        summed[t] = summed.get(t, 0) + c
-                ranks = {n: teleport + (dn * summed.get(n, 0)) // dd
-                         for n in nodes}
-            yield pd.DataFrame({"node": list(ranks),
-                                "rank_fp": list(ranks.values())},
-                               dtype="int64")
-
-        return e.mapInPandas(_run, "node long, rank_fp long")
-    nodes = (e.select(F.col("s").alias("node"))
-             .unionAll(e.select(F.col("t").alias("node")))
-             .distinct())
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    ew = e.join(outdeg, "s")      # (s, t, od) — static across iters
-    ranks = nodes.select("node", F.lit(int(scale)).alias("rank_fp"))
-    for _ in range(n_iters):
-        contrib = (ew.join(ranks.withColumnRenamed("node", "s"), "s")
-                   .select("t", F.expr("rank_fp div od").alias("c")))
-        summed = contrib.groupBy("t").agg(F.sum("c").alias("sc"))
-        ranks = (nodes.join(summed.withColumnRenamed("t", "node"),
-                            "node", "left")
-                 .select("node",
-                         (F.lit(teleport)
-                          + F.expr(f"({damping_num} * "
-                                   f"coalesce(sc, 0)) div "
-                                   f"{damping_den}"))
-                         .alias("rank_fp")))
-    return ranks
+    return vertex_fixpoint(
+        e, Rank(int(n_iters), int(scale), int(damping_num),
+                int(damping_den)),
+        n_iters, _fits_one_task(e), f"pagerank_fixed_point n_iters={n_iters}")
 
 
 def sparse_cosine_pairs(docs: DataFrame, id_col: str = "doc_id",

@@ -10,16 +10,17 @@ citation/link prediction (common-neighbor scoring), and community
 detection that a single bridge edge does not collapse
 (label_propagation).
 
-All four keep the properties the rest of the repo's iterative
-operators pin:
-
-* integer-exact state (hop counts, degrees, ppm-scaled ratios) so the
-  value-hash oracle can compare bit-for-bit across engines;
-* per-round shuffles keyed on node ids only — the edge relation is
-  hash-partitioned once (``localCheckpoint``) and never re-shipped;
-* lineage truncation per round, bounded driver-side convergence
-  probes (``limit(1).count()`` / edge-count compare), no collect of
-  any O(V) or O(E) state.
+The iterative ones (BFS, SSSP, k-core, LPA) are vertex programs on
+the fixpoint engine (``operators/fixpoint.py``): each operator
+materializes its edge relation once (``localCheckpoint``), asks
+``_fits_one_task`` whether it sits in one partition, and makes one
+``vertex_fixpoint`` call.  In one partition the whole round schedule
+runs inside one ``mapInPandas`` task; otherwise vertex state sits in
+hash blocks partitioned once, and each round only the vertices that
+changed send along their out-edges.  State is integer-exact (hop
+counts, distances, degrees, labels), so both modes emit the same rows
+and the value-hash oracle compares bit-for-bit; every round cap
+raises instead of returning a truncated result.
 
 Reference parity: the reference pipeline has no graph engine at all —
 these cover the "beyond the reference: large-scale training-data
@@ -32,24 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geohub_data_pipeline_spark.localdata import local_df
+from geohub_data_pipeline_spark.operators.fixpoint import (
+    Core, MinPlus, Vote, vertex_fixpoint,
+)
 from geohub_data_pipeline_spark.operators.skew import fits_one_task
 
-# r12: every operator in this module gates its synchronous driver
-# loop on the MATERIALIZED edge relation's partition count (the r11
-# halo-engine / classifier P=1 pattern, guide §1.2/§2).  When the
-# checkpointed edges landed in ONE partition, each round's 2-stage
-# job only exchanges data with itself while paying the full
-# job-dispatch floor (measured r12 at sf0.01, 32 cores:
-# graph_bfs_hops 67 jobs / 10.6 s, graph_sssp_weighted 99 jobs /
-# 6.1 s, graph_kcore 28 jobs / 2.4 s, graph_label_propagation 23
-# jobs / 2.5 s — scripts/probe_iterative_jobs.py).  The local paths
-# run the IDENTICAL round schedule (same synchronous updates, same
-# convergence probes, same loud caps — all state is integer-exact,
-# so the emitted rows are bit-identical; pinned per operator by a
-# forced-distributed parity pytest) inside one task via mapInPandas.
-# At real scale the materialized relation spans many partitions and
-# the distributed loops below run unchanged.
+# Looked up per call (tests and the benchmark's leg recorder wrap it):
+# True when the checkpointed edge relation sits in one partition, and
+# the engine then runs the whole schedule inside one task.
 _fits_one_task = fits_one_task
 
 
@@ -59,101 +50,21 @@ def bfs_hops(edges: DataFrame, source: int, src: str = "src",
     frontier-expansion BFS — ``(node, hop)`` for every node reachable
     from ``source`` within ``max_hops`` (the source itself at hop 0).
 
-    Each round joins the current frontier against the edge list and
-    anti-joins the visited set, so a node is labeled the first time
-    it is reached — which IS its shortest hop distance, making the
-    result exactly ``min(hop)`` over all paths (what the recursive-CTE
-    oracle computes) without ever enumerating multiple paths.
-
-    Scale: the edge list is materialized once (``localCheckpoint``)
-    and re-used every round; per round the only moving state is the
-    frontier (worst case O(V), typically a thin BFS layer) through
-    one hash join keyed on src and one anti-join keyed on node.
-    Frontier emptiness is the convergence probe (``limit(1).count()``,
-    stops at the first row).  No path enumeration, no driver-side
-    graph state — a 100 TB edge relation behind the same O(layer)
-    exchanges.
+    The min-plus program with unit steps: a node's hop drops to one
+    more than a reached in-neighbour's, and only the nodes whose hop
+    just dropped send, so a round's messages are the BFS layer.  The
+    fixpoint is exactly ``min(hop)`` over all paths (what the
+    recursive-CTE oracle computes).  Raises if the frontier still
+    moves after ``max_hops`` rounds.
     """
     e = (edges.select(F.col(src).cast("long").alias("s"),
                       F.col(dst).cast("long").alias("t"))
          .filter(F.col("s") != F.col("t"))
          .distinct()
          .localCheckpoint())
-    if _fits_one_task(e):
-        # in-task fixpoint: identical layer schedule (first-reach =
-        # min hop), identical truncation probe and RAISE — the raise
-        # now surfaces at ACTION time wrapped in Spark's Python
-        # exception, message preserved
-        src0, cap = int(source), int(max_hops)
-
-        def _run(it):
-            import pandas as pd
-
-            adj: dict = {}
-            for pdf in it:
-                for s, t in zip(pdf["s"].to_numpy(),
-                                pdf["t"].to_numpy()):
-                    adj.setdefault(int(s), []).append(int(t))
-            vis = {src0: 0}
-            frontier: set = {src0}
-            converged = False
-            for hop in range(1, cap + 1):
-                nxt = {t for n in frontier for t in adj.get(n, ())
-                       if t not in vis}
-                if not nxt:
-                    converged = True
-                    break
-                for t in nxt:
-                    vis[t] = hop
-                frontier = nxt
-            if not converged and any(
-                    t not in vis
-                    for n in frontier for t in adj.get(n, ())):
-                raise RuntimeError(
-                    f"bfs_hops: frontier still expanding after "
-                    f"max_hops={cap} rounds — reachability set would "
-                    f"be truncated; raise max_hops")
-            yield pd.DataFrame({"node": list(vis),
-                                "hop": list(vis.values())},
-                               dtype="int64")
-
-        return e.mapInPandas(_run, "node long, hop long")
-    visited = (local_df(e.sparkSession, [(int(source), 0)],
-                        "node long, hop int")
-               .localCheckpoint())
-    frontier = visited
-    converged = False
-    for hop in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["s"])
-               .select(F.col("t").alias("node"))
-               .distinct()
-               .join(visited, "node", "left_anti")
-               .withColumn("hop", F.lit(hop))
-               .localCheckpoint())
-        if nxt.limit(1).count() == 0:
-            converged = True
-            break
-        # visited stays a LAZY union of already-checkpointed
-        # frontiers: no per-round materialization job, and the plan
-        # is a flat union over <= max_hops checkpointed layers
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    if not converged:
-        # One extra probe: a truncated reachability set is
-        # indistinguishable from a converged one, so — like
-        # kcore_members and sssp_bellman_ford — RAISE loudly when
-        # reachable nodes remain past the cap instead of returning a
-        # wrong-but-plausible subset.
-        remaining = (frontier.join(e, frontier["node"] == e["s"])
-                     .select(F.col("t").alias("node"))
-                     .distinct()
-                     .join(visited, "node", "left_anti"))
-        if remaining.limit(1).count() != 0:
-            raise RuntimeError(
-                f"bfs_hops: frontier still expanding after "
-                f"max_hops={max_hops} rounds — reachability set would "
-                f"be truncated; raise max_hops")
-    return visited.select("node", F.col("hop").cast("long").alias("hop"))
+    return vertex_fixpoint(e, MinPlus("hop", source=int(source), step=1),
+                           max_hops, _fits_one_task(e),
+                           f"bfs_hops max_hops={max_hops}")
 
 
 def kcore_members(edges: DataFrame, k: int, src: str = "id_a",
@@ -170,12 +81,9 @@ def kcore_members(edges: DataFrame, k: int, src: str = "id_a",
     path-like graphs peel only their endpoints each round, so the
     cap is reachable on legitimate inputs.
 
-    Scale: per round one degree aggregation (groupBy node) and two
-    semi-joins of the edge list against the surviving vertex set, all
-    keyed on node ids; ``localCheckpoint`` truncates lineage and the
-    convergence probe compares alive-edge counts (a count(), not a
-    collect).  Degree skew is harmless here — peeling only ever
-    *removes* low-degree nodes, hubs never fan anything out.
+    On the engine each round peels every live node whose live degree
+    is below ``k``; a node that died sends its neighbours the count
+    of dead neighbours, so only the peeled layer sends.
 
     Returns ``(node, core_degree)`` — members of the k-core with
     their degree inside the core, the number production spam-kernel
@@ -188,79 +96,11 @@ def kcore_members(edges: DataFrame, k: int, src: str = "id_a",
                      F.greatest("u", "v").alias("v"))
              .distinct()
              .localCheckpoint())
-    if _fits_one_task(alive):
-        # in-task peel: same simultaneous-peel rounds, same
-        # convergence rule (alive-edge count unchanged or zero),
-        # same loud cap (RAISE surfaces at action time)
-        k0, cap = int(k), int(max_iters)
-
-        def _run(it):
-            import pandas as pd
-
-            E: set = set()
-            for pdf in it:
-                E.update(zip(pdf["u"].astype("int64"),
-                             pdf["v"].astype("int64")))
-            E = {(int(a), int(b)) for a, b in E}
-            n_alive = len(E)
-            converged = n_alive == 0
-            for _ in range(cap):
-                if converged:
-                    break
-                deg: dict = {}
-                for a, b in E:
-                    deg[a] = deg.get(a, 0) + 1
-                    deg[b] = deg.get(b, 0) + 1
-                keep = {x for x, d in deg.items() if d >= k0}
-                nxt = {(a, b) for a, b in E
-                       if a in keep and b in keep}
-                n_nxt = len(nxt)
-                converged = n_nxt == n_alive or n_nxt == 0
-                E = nxt
-                n_alive = n_nxt
-            if not converged:
-                raise RuntimeError(
-                    f"k-core peel did not reach its fixpoint within "
-                    f"{cap} rounds ({n_alive} edges still alive); "
-                    f"raise max_iters")
-            cd: dict = {}
-            for a, b in E:
-                cd[a] = cd.get(a, 0) + 1
-                cd[b] = cd.get(b, 0) + 1
-            yield pd.DataFrame({"node": list(cd),
-                                "core_degree": list(cd.values())},
-                               dtype="int64")
-
-        return alive.mapInPandas(_run, "node long, core_degree long")
-    n_alive = alive.count()
-    converged = n_alive == 0
-    for _ in range(max_iters):
-        if converged:
-            break
-        deg = (alive.select(F.col("u").alias("node"))
-               .unionAll(alive.select(F.col("v").alias("node")))
-               .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
-        keep = deg.filter(F.col("d") >= k).select("node")
-        nxt = (alive
-               .join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-               .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-               .select("u", "v")
-               .localCheckpoint())
-        n_nxt = nxt.count()
-        converged = n_nxt == n_alive or n_nxt == 0
-        alive = nxt
-        n_alive = n_nxt
-    if not converged:
-        # a silent cap-exit would return a superset that is NOT the
-        # k-core (e.g. a long path peels two endpoints per round);
-        # wrong-but-plausible is worse than loud
-        raise RuntimeError(
-            f"k-core peel did not reach its fixpoint within "
-            f"{max_iters} rounds ({n_alive} edges still alive); "
-            f"raise max_iters")
-    return (alive.select(F.col("u").alias("node"))
-            .unionAll(alive.select(F.col("v").alias("node")))
-            .groupBy("node").agg(F.count(F.lit(1)).alias("core_degree")))
+    # round 0 already peels on the full degree: max_iters peels are
+    # rounds 0 .. max_iters - 1
+    return vertex_fixpoint(alive, Core(int(k)), max(int(max_iters) - 1, 0),
+                           _fits_one_task(alive),
+                           f"kcore_members max_iters={max_iters}")
 
 
 def common_neighbor_pairs(edges: DataFrame, min_common: int = 2,
@@ -330,15 +170,12 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     rounds; LPA famously converges in ~5), so a round-unrolled SQL
     oracle can reproduce it exactly — no convergence probe needed.
 
-    Scale per round: one edge-to-label join keyed on the neighbor
-    id, one (node, label) vote count, one per-node argmax window —
-    all shuffles keyed on node ids, label state is O(V), edges are
-    checkpointed once and never re-shipped.
+    On the engine every node sends its label along its edges each
+    round (votes are counted per sender block and cached at the
+    receiver) for exactly ``rounds`` rounds.
 
     Returns ``(node, label)``.
     """
-    from pyspark.sql.window import Window
-
     sym = (edges.select(F.col(src).cast("long").alias("u"),
                         F.col(dst).cast("long").alias("v"))
            .filter(F.col("u") != F.col("v"))
@@ -346,60 +183,9 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
                    F.greatest("u", "v").alias("v"))
            .distinct()
            .localCheckpoint())
-    if _fits_one_task(sym):
-        # in-task rounds: same synchronous vote tally, same
-        # (count desc, label asc) argmax — integer-exact.  The
-        # symmetric adjacency is derived in-task from the undirected
-        # edge list (exactly what the distributed union below does).
-        r0 = int(rounds)
-
-        def _run(it):
-            import pandas as pd
-
-            nbrs: dict = {}
-            for pdf in it:
-                for u, v in zip(pdf["u"].to_numpy(),
-                                pdf["v"].to_numpy()):
-                    nbrs.setdefault(int(u), []).append(int(v))
-                    nbrs.setdefault(int(v), []).append(int(u))
-            lab = {n: n for n in nbrs}
-            for _ in range(r0):
-                new = {}
-                for n, ms in nbrs.items():
-                    votes: dict = {lab[n]: 1}
-                    for m in ms:
-                        lm = lab[m]
-                        votes[lm] = votes.get(lm, 0) + 1
-                    new[n] = min(votes.items(),
-                                 key=lambda kv: (-kv[1], kv[0]))[0]
-                lab = new
-            yield pd.DataFrame({"node": list(lab),
-                                "label": list(lab.values())},
-                               dtype="int64")
-
-        return sym.mapInPandas(_run, "node long, label long")
-    # adj derives from the CHECKPOINTED sym (narrow union of two
-    # selects over materialized rows), so the per-round joins never
-    # re-run the upstream lineage
-    adj = (sym.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-           .unionAll(sym.select(F.col("v").alias("node"),
-                                F.col("u").alias("nbr"))))
-    labels = (adj.select("node").distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint())
-    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(rounds):
-        nbr_votes = (adj.join(
-            labels.withColumnRenamed("node", "nbr"), "nbr")
-            .select("node", "label"))
-        votes = nbr_votes.unionAll(labels.select("node", "label"))
-        tally = (votes.groupBy("node", "label")
-                 .agg(F.count(F.lit(1)).alias("c")))
-        labels = (tally.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1)
-                  .select("node", "label")
-                  .localCheckpoint())
-    return labels
+    return vertex_fixpoint(sym, Vote(int(rounds)), int(rounds),
+                           _fits_one_task(sym),
+                           f"label_propagation rounds={rounds}")
 
 
 def sssp_bellman_ford(edges: DataFrame, source: int,
@@ -422,10 +208,9 @@ def sssp_bellman_ford(edges: DataFrame, source: int,
     relaxation has not converged within ``max_rounds`` the function
     RAISES rather than return inflated distances.
 
-    Scale per round: one edge-keyed join of the distance vector
-    (O(reached)), one groupBy(node) min — shuffles keyed on node
-    ids; edges are checkpointed once.  The convergence probe joins
-    successive vectors and stops at the first improved row.
+    The min-plus program with edge weights: only the nodes whose
+    distance improved last round send, so the traffic follows the
+    relaxation frontier.
 
     Returns ``(node, dist)`` over reached nodes.
     """
@@ -435,67 +220,6 @@ def sssp_bellman_ford(edges: DataFrame, source: int,
          .filter(F.col("u") != F.col("v"))
          .groupBy("u", "v").agg(F.min("w").alias("w"))
          .localCheckpoint())
-    if _fits_one_task(e):
-        # in-task min-plus rounds: same synchronous relaxation from
-        # the PREVIOUS round's vector, same improvement probe and
-        # loud cap — integer distances, bit-identical fixpoint
-        src0, cap = int(source), int(max_rounds)
-
-        def _run(it):
-            import pandas as pd
-
-            adj: dict = {}
-            for pdf in it:
-                for u, v, w in zip(pdf["u"].to_numpy(),
-                                   pdf["v"].to_numpy(),
-                                   pdf["w"].to_numpy()):
-                    adj.setdefault(int(u), []).append((int(v), int(w)))
-            dist = {src0: 0}
-            converged = False
-            for _ in range(cap):
-                new = dict(dist)
-                for u, d in dist.items():
-                    for v, w in adj.get(u, ()):
-                        nd = d + w
-                        if nd < new.get(v, nd + 1):
-                            new[v] = nd
-                improved = any(dist.get(n) is None or d < dist[n]
-                               for n, d in new.items())
-                dist = new
-                if not improved:
-                    converged = True
-                    break
-            if not converged:
-                raise RuntimeError(
-                    f"Bellman-Ford did not converge within {cap} "
-                    f"rounds; raise max_rounds")
-            yield pd.DataFrame({"node": list(dist),
-                                "dist": list(dist.values())},
-                               dtype="int64")
-
-        return e.mapInPandas(_run, "node long, dist long")
-    dist = (local_df(e.sparkSession, [(int(source), 0)],
-                     "node long, dist long")
-            .localCheckpoint())
-    converged = False
-    for _ in range(max_rounds):
-        cand = (e.join(dist.withColumnRenamed("node", "u"), "u")
-                .select(F.col("v").alias("node"),
-                        (F.col("dist") + F.col("w")).alias("dist")))
-        new = (dist.unionByName(cand)
-               .groupBy("node").agg(F.min("dist").alias("dist"))
-               .localCheckpoint())
-        improved = (new.join(
-            dist.withColumnRenamed("dist", "__old"), "node", "left")
-            .filter(F.col("__old").isNull()
-                    | (F.col("dist") < F.col("__old")))
-            .limit(1).count())
-        dist = new
-        if improved == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"Bellman-Ford did not converge within {max_rounds} "
-            f"rounds; raise max_rounds")
-    return dist
+    return vertex_fixpoint(e, MinPlus("dist", source=int(source)),
+                           max_rounds, _fits_one_task(e),
+                           f"sssp_bellman_ford max_rounds={max_rounds}")

@@ -27,13 +27,14 @@ shuffle.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geohub_data_pipeline_spark.operators.fixpoint import _halo_fixpoint
 
 BLOCK = 256
 
@@ -1218,20 +1219,6 @@ def _sweep_relax(dd: np.ndarray, dc: np.ndarray, use_diag: bool,
     return converged
 
 
-def _block_partition_func(key) -> int:
-    """Deterministic cross-process partition hash for block keys
-    (dataset, subdataset, band, block_x, block_y).  Python's builtin
-    string hash is salted per process (PYTHONHASHSEED), so
-    ``portable_hash`` would need env setup a vanilla driver session
-    doesn't have — crc32 is stable everywhere."""
-    import zlib
-
-    ds, sub, band, bx, by = key
-    h = zlib.crc32(f"{ds}\x00{sub}".encode())
-    return (h ^ (int(band) * 0x9E3779B1) ^ (int(bx) * 0x85EBCA77)
-            ^ (int(by) * 0xC2B2AE3D)) & 0x7FFFFFFF
-
-
 def _pack_pixels(df: DataFrame) -> DataFrame:
     """``pixels array<double>`` -> raw little-endian float64 bytes,
     via an Arrow-batched kernel — the fast lane ACROSS the
@@ -1284,283 +1271,103 @@ def _unpack_pixels(df: DataFrame) -> DataFrame:
     return df.mapInPandas(unpack, BLOCK_SCHEMA)
 
 
-def _px_np(v) -> np.ndarray:
-    """pixels cell -> float64 ndarray: raw bytes (from
-    ``_pack_pixels``) or a plain sequence.  The frombuffer view is
-    read-only; every consumer either reads it or derives new arrays
-    (np.where / astype), never mutates in place."""
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        return np.frombuffer(v, np.float64)
-    return np.asarray(v, np.float64)
+def _raster_fixpoint(lvl0: DataFrame, rows: DataFrame, init, strip_fn,
+                     relax_fn, max_rounds: int, out_px,
+                     cap_label: str) -> DataFrame:
+    """Run a block relax program on the fixpoint engine: ``rows``
+    (the level-0 blocks ``lvl0``, maybe joined with seeds) cross into
+    the engine pixel-packed; each block's state is its size, srid and
+    ``init(row, px, bx, by)`` (``px``: the block's pixels, nodata as
+    NaN), and each final block's pixels are ``out_px(state)``.  One
+    JVM-side count of ``lvl0`` sizes the partitions."""
+    spark = lvl0.sparkSession
+
+    def to_kv(r):
+        w, h = int(r["width"]), int(r["height"])
+        # a read-only view: programs derive new arrays, never write it
+        px = np.frombuffer(r["pixels"], np.float64).reshape(h, w)
+        nod = r["nodata"]
+        if nod is not None and not np.isnan(nod):
+            px = np.where(px == float(nod), np.nan, px)
+        bx, by = int(r["block_x"]), int(r["block_y"])
+        st = {"w": w, "h": h, "srid": int(r["srid"]), "changed": True,
+              "fresh": True}
+        st.update(init(r, px, bx, by))
+        return (r["dataset"], r["subdataset"], int(r["band"]), bx, by), st
+
+    meta = lvl0.agg(F.count(F.lit(1)),
+                    F.max(F.col("width") * F.col("height"))).first()
+    final = _halo_fixpoint(spark, _pack_pixels(rows).rdd.map(to_kv),
+                           strip_fn, relax_fn, max_rounds,
+                           cap_label=cap_label, n_blocks=meta[0] or 0,
+                           px_per_block=meta[1])
+
+    def to_row(kv):
+        (ds, sub, band, bx, by), st = kv
+        return (ds, sub, band, 0, bx, by, st["w"], st["h"],
+                out_px(st).ravel().tobytes(), float("nan"), st["srid"])
+
+    return _unpack_pixels(spark.createDataFrame(
+        final.map(to_row), _BLOCK_SCHEMA_BIN, verifySchema=False))
 
 
-def _halo_fixpoint(spark, init_kv, strip_fn, relax_fn,
-                   max_rounds: int, num_partitions: int | None = None,
-                   n_blocks: int | None = None,
-                   px_per_block: int | None = None):
-    """Partitioning-preserving iterative halo engine — the state
-    store behind ``cost_distance`` and ``flow_accumulation`` (the r6
-    judge's last flagged scale debt: the DataFrame loop re-shuffled
-    ~1x full state per round because localCheckpoint drops the
-    groupBy partitioning).
+# neighbour offset (dby, dbx) -> (the 1-px strip of this block that
+# neighbour needs, the halo side it fills there: "<row>,<col>" with
+# rows n/c/s and cols w/c/e)
+_HALO_STRIPS = {
+    (0, -1): (np.s_[:, :1], "c,e"), (0, 1): (np.s_[:, -1:], "c,w"),
+    (-1, 0): (np.s_[:1, :], "s,c"), (1, 0): (np.s_[-1:, :], "n,c"),
+    (-1, -1): (np.s_[:1, :1], "s,e"),
+    (-1, 1): (np.s_[:1, -1:], "s,w"),
+    (1, -1): (np.s_[-1:, :1], "n,e"),
+    (1, 1): (np.s_[-1:, -1:], "n,w"),
+}
 
-    State lives in an RDD keyed by block, hash-partitioned ONCE with
-    a deterministic partition function.  Each round:
 
-    1. CHANGED blocks emit their 1-px edge strips (``strip_fn``) —
-       the active wavefront only, ~1.5% of pixel volume at BLOCK=256
-       even when every block is active;
-    2. ONLY the strips shuffle (``partitionBy`` on the same
-       function, so a strip lands in the partition that already
-       holds its target block);
-    3. a per-partition zip pairs the in-place state list with its
-       strip mailbox — state pixels move over the network exactly
-       once, at initialization — and ``relax_fn`` runs on blocks
-       with mail (a block with no new inputs is already at its
-       local fixpoint, so it is skipped outright);
-    4. one count of changed blocks per round drives termination.
+def _send_strips(key, st, *fields):
+    """A block's messages: to each of its 8 neighbours, (halo side,
+    *that neighbour's 1-px strip of each state array ``fields``)."""
+    ds, sub, band, bx, by = key
+    for (dby, dbx), (sl, kind) in _HALO_STRIPS.items():
+        yield ((ds, sub, band, bx + dbx, by + dby),
+               (kind,) + tuple(st[f][sl].copy() for f in fields))
 
-    ``localCheckpoint`` per round truncates the linear lineage; the
-    partition-index alignment the zip relies on is physical, so no
-    partitioner metadata needs to survive it.
 
-    ``init_kv``: RDD[(key, state dict)] — state must carry
-    ``changed`` (init True) and ``fresh`` (init True: forces the
-    first local relax even for blocks with no mail, e.g. a source
-    block).  ``strip_fn(key, state) -> iter[(nbr_key, payload)]``;
-    ``relax_fn(key, state, payloads) -> state`` (sets ``changed``).
-    Returns the final RDD[(key, state)].
+def _merge_halo(st, payloads) -> dict:
+    """The block's halo cache with this round's mail folded in: the
+    freshest strips per side.  A relax must see the COMPLETE halo, not
+    just this round's mail, because only changed neighbours re-send."""
+    halo = dict(st.get("halo") or {})
+    for kind, *strips in payloads:
+        halo[kind] = strips
+    return halo
 
-    Per-partition memory: one partition's blocks materialize as a
-    list for the zip, so size ``num_partitions`` to the cluster —
-    the same knob as shuffle partitions.  The default counts the
-    blocks once and caps partitions at that count (a tiny raster
-    must not pay hundreds of empty-task launches per round, the
-    dominant cost of a synchronous loop on a quiet cluster).
-    """
-    sc = spark.sparkContext
-    if num_partitions:
-        P = int(num_partitions)
-    else:
-        # ``n_blocks`` lets the consumer supply the count from a
-        # cheap JVM-side DataFrame count; falling back to counting
-        # the RDD materializes the python init chain one extra time
-        if n_blocks is None:
-            init_kv = init_kv.persist()
-            n_blocks = init_kv.count()
-        # Partition count balances two floors (measured r11):
-        # * task-dispatch: every round is a synchronous 2-stage job,
-        #   so with SMALL blocks the ~0.2 s/stage dispatch floor
-        #   dominates and packing several blocks per task wins (the
-        #   2x2-block 64-px gate fixture: P=4 ~0.95 s/round vs P=1
-        #   ~0.75);
-        # * compute: with BIG blocks the numpy relax is the cost and
-        #   packing serializes it (1M-px probe, 16 256-px blocks:
-        #   P=4 rounds 1.5-3.7 s vs P=16 ~0.6-1.1).
-        # Target ~one full-size (256^2 px) block of relax work per
-        # task: blocks_per_task = 65536 / px_per_block, so 256-px
-        # blocks get a task each and 64-px fixture blocks pack 16 to
-        # a task.  At real scale n_blocks >> parallelism and P stays
-        # = defaultParallelism regardless.
-        per_task = (max(1, 65536 // max(1, int(px_per_block)))
-                    if px_per_block else 1)
-        P = max(1, min(-(-int(n_blocks) // per_task),
-                       sc.defaultParallelism))
-    # persist() BEFORE localCheckpoint is load-bearing: it sets the
-    # python-side is_cached flag, which stops PipelinedRDD from
-    # fusing later rounds' lambdas around this RDD with a fresh
-    # JVM chain — without it every round re-derives from round 0
-    # and the checkpoint mark never participates (measured: stage
-    # count grows linearly, 300+ stages by round 40)
-    state = init_kv.partitionBy(P, _block_partition_func)
 
-    if P == 1:
-        # Degenerate-partitioning fast path (r11): with every block in
-        # ONE partition, the synchronous rounds exchange strips with
-        # themselves — each round still pays a full 2-stage Python-RDD
-        # job (~0.6 s dispatch floor measured on this box) plus a
-        # localCheckpoint, for zero distribution benefit.  Run the
-        # IDENTICAL round schedule inside the single task instead:
-        # round 0 mail-less relax, then synchronous strip-deliver +
-        # relax rounds with the same trigger rule as ``merge`` (mail,
-        # or self-changed while capped), same termination (no changed
-        # blocks), same ``max_rounds`` bound.  The state trajectory is
-        # step-for-step the distributed loop's — only the job/shuffle
-        # plumbing is gone.  At real scale n_blocks >> parallelism
-        # keeps P > 1 and this branch never fires.
-        mr = int(max_rounds)
-        dbg = bool(os.environ.get("SPARK_GRAFT_HALO_DEBUG"))
+def _halo_canvas(core: np.ndarray, halo: dict, i: int, fill):
+    """(h+2, w+2) canvas: ``core`` inside, strip ``i`` of every cached
+    halo side on the rim, ``fill`` where no neighbour sent one."""
+    h, w = core.shape
+    c = np.full((h + 2, w + 2), fill)
+    c[1:-1, 1:-1] = core
+    for kind, strips in halo.items():
+        sh, sw = strips[i].shape
+        ys, xs = kind.split(",")
+        y0 = {"n": 0, "c": 1, "s": h + 2 - sh}[ys]
+        x0 = {"w": 0, "c": 1, "e": w + 2 - sw}[xs]
+        c[y0:y0 + sh, x0:x0 + sw] = strips[i]
+    return c
 
-        def local_fixpoint(it):
-            blocks = []
-            for k, st in it:
-                st = relax_fn(k, st, [])
-                st["fresh"] = False
-                blocks.append((k, st))
-            state = dict(blocks)
-            for _ in range(mr):
-                box: dict = {}
-                n_changed = 0
-                for k, st in state.items():
-                    if st["changed"]:
-                        n_changed += 1
-                        for nk, payload in strip_fn(k, st):
-                            box.setdefault(nk, []).append(payload)
-                if not n_changed:
-                    break
-                for k in list(state):
-                    st = state[k]
-                    payloads = box.get(k)
-                    if payloads or (st["changed"]
-                                    and st.get("capped", True)):
-                        state[k] = relax_fn(k, st, payloads or [])
-                    elif st["changed"]:
-                        st["changed"] = False
-            return iter(state.items())
 
-        if dbg:
-            print("[halo] P=1: in-task fixpoint (no per-round jobs)",
-                  flush=True)
-        out = state.mapPartitions(local_fixpoint, True)
-        out.persist()
-        out.localCheckpoint()
-        return out
+def _gids(bx: int, by: int, h: int, w: int, block: int) -> np.ndarray:
+    """Global pixel ids ``global_row * 2^26 + global_col`` of a block."""
+    return ((by * block + np.arange(h))[:, None] * (1 << 26)
+            + (bx * block + np.arange(w))[None, :])
 
-    def _payload_eq(a, b) -> bool:
-        # structural equality for strip payloads (tuples of numpy
-        # float arrays / scalars / strings); NaN compares equal so
-        # obstacle pixels do not defeat the dedup
-        if type(a) is not type(b):
-            return False
-        if isinstance(a, (tuple, list)):
-            return len(a) == len(b) and all(
-                _payload_eq(x, y) for x, y in zip(a, b))
-        if isinstance(a, np.ndarray):
-            if a.dtype != b.dtype or a.shape != b.shape:
-                return False
-            if np.issubdtype(a.dtype, np.floating):
-                return bool(np.array_equal(a, b, equal_nan=True))
-            return bool(np.array_equal(a, b))
-        return a == b
 
-    def _dedup_strips(k, st):
-        # Sender-side strip dedup (r12, r11 verdict item 4): a
-        # changed block re-sends ALL its border strips every round,
-        # but typically only the wavefront-facing borders moved — a
-        # strip identical to the last one DELIVERED to that neighbor
-        # is already in the receiver's halo cache (every sent strip
-        # is merged into it at relax time), so re-delivering it
-        # cannot change any state and only costs shuffle bytes.
-        # Strips are computed at relax time (pure function of the
-        # post-relax state — the same values the next round's
-        # send-time call produced) and stored on the state, with the
-        # last-sent copy per neighbor kept for the comparison.
-        sent = st.get("__sent") or {}
-        out = []
-        for nk, payload in strip_fn(k, st):
-            if not _payload_eq(payload, sent.get(nk)):
-                out.append((nk, payload))
-                sent[nk] = payload
-        st["__sent"] = sent
-        st["__out"] = out
-
-    def merge(pair):
-        items, mail = pair
-        box: dict = {}
-        for k, v in mail:
-            box.setdefault(k, []).append(v)
-        for k, st in items:
-            payloads = box.get(k)
-            # relax on mail, on the first round (fresh), AND when the
-            # block itself changed last round: a relax kernel may cap
-            # its internal passes mid-propagation, so a self-changed
-            # block must keep relaxing until it reports quiescence —
-            # skipping it would freeze a non-converged interior
-            # kernels that report ``capped`` (cost_distance /
-            # flow_accumulation internal-pass caps) skip the forced
-            # self-changed re-relax once they reached their local
-            # fixpoint; kernels that do not report stay on the
-            # conservative always-re-relax rule.  A skipped block's
-            # ``changed`` must drop to False: its strips went out
-            # THIS round, and leaving the flag up would re-send
-            # them (and hold n_changed above zero) forever.
-            if payloads or st.get("fresh") or (
-                    st["changed"] and st.get("capped", True)):
-                sent = st.get("__sent")          # survives relax_fn
-                st = relax_fn(k, st, payloads or [])
-                st["fresh"] = False
-                if sent is not None:
-                    st["__sent"] = sent
-                if st["changed"]:
-                    _dedup_strips(k, st)
-                else:
-                    st["__out"] = []
-            elif st["changed"]:
-                st["changed"] = False
-                st["__out"] = []
-            yield k, st
-
-    import time as _time
-    # Round 0 fused into the init materialization (r11): every block
-    # starts ``fresh`` and relaxes with an empty mailbox anyway, so
-    # running that first mail-less relax inside the same job that
-    # materializes the partitioned state saves one full synchronous
-    # round (one job + its dispatch floor).  Strips that the old
-    # round 1 delivered from the PRE-relax state now go out in the
-    # next round from the post-relax state instead — the relax
-    # kernels are monotone fixpoint iterations, so the schedule
-    # change cannot alter the fixpoint (oracle + Dijkstra-reference
-    # pytest re-verified).
-    t0 = _time.time()
-    state = state.mapPartitions(
-        lambda it: merge((list(it), [])), True)
-    state.persist()
-    state.localCheckpoint()
-    n_changed = state.filter(lambda kv: kv[1]["changed"]).count()
-    if init_kv.is_cached:
-        init_kv.unpersist()
-    if os.environ.get("SPARK_GRAFT_HALO_DEBUG"):
-        print(f"[halo] round0 changed={n_changed} "
-              f"wall={_time.time() - t0:.2f}s", flush=True)
-    for _ in range(int(max_rounds)):
-        if not n_changed:
-            break
-        t0 = _time.time()
-        # strips were computed (and deduped against the last-sent
-        # copies) at relax time; a block that did not change this
-        # round has an empty outbox
-        strips = (state.flatMap(
-            lambda kv: kv[1].get("__out") or () if kv[1]["changed"]
-            else ())
-            .partitionBy(P, _block_partition_func))
-        sblk = state.mapPartitions(lambda it: [list(it)], True)
-        tblk = strips.mapPartitions(lambda it: [list(it)], True)
-        new_state = sblk.zip(tblk).flatMap(merge, True)
-        new_state.persist()        # block pipelining (see above)
-        new_state.localCheckpoint()
-        n_changed = new_state.filter(
-            lambda kv: kv[1]["changed"]).count()
-        if os.environ.get("SPARK_GRAFT_HALO_DEBUG"):
-            def _pb(p):
-                if isinstance(p, np.ndarray):
-                    return p.nbytes
-                if isinstance(p, (tuple, list)):
-                    return sum(_pb(x) for x in p)
-                return 8
-            n_s, b_s = new_state.map(
-                lambda kv: (len(kv[1].get("__out") or ()),
-                            sum(_pb(p) for _, p in
-                                (kv[1].get("__out") or ())))).reduce(
-                lambda a, b: (a[0] + b[0], a[1] + b[1]))
-            print(f"[halo] round changed={n_changed} "
-                  f"next_strips={n_s} ({b_s / 1e3:.1f} kB after "
-                  f"sender dedup) wall={_time.time() - t0:.2f}s",
-                  flush=True)
-        state.unpersist()
-        state = new_state
-        if not n_changed:
-            break
-    return state
+def _label_px(st) -> np.ndarray:
+    px = st["lab"].astype(np.float64)
+    px[st["lab"] < 0] = np.nan         # nodata / unresolved
+    return px
 
 
 def cost_distance(blocks: DataFrame, sources: DataFrame,
@@ -1577,17 +1384,13 @@ def cost_distance(blocks: DataFrame, sources: DataFrame,
 
     1. per-block state (cost + running dist) initialized from the
        sources (one equi-join);
-    2. each ROUND regroups the state on its block key — the self
-       block plus the 8 neighbors' 1-pixel edge strips land in one
-       shuffle (state rides it once per round; a partitioning-
-       preserving state store would cut the exchange to strips-only,
-       but DataFrame localCheckpoint drops the partitioning, so the
-       honest per-round network cost is ~1x state + 1.5% strips) —
-       then every block relaxes to a LOCAL fixpoint with chamfer-
-       style sweeps and reports one boolean;
-    3. the driver loops on `any(changed)` — one aggregated row per
-       round, never pixel data — until the global fixpoint, bounded
-       by max_rounds.
+    2. each ROUND on the fixpoint engine (``operators/fixpoint.py``)
+       ships only the changed blocks' 1-pixel edge strips to their
+       neighbours (the state is partitioned once and never moves);
+       every block with mail relaxes to a LOCAL fixpoint with
+       chamfer-style sweeps and reports one boolean;
+    3. the driver loops until no block changed — one count per
+       round, never pixel data — and raises past max_rounds.
 
     Rounds needed = longest shortest-path measured in BLOCKS (a
     wavefront crosses one block ring per round at minimum — in
@@ -1613,91 +1416,42 @@ def cost_distance(blocks: DataFrame, sources: DataFrame,
     ).groupBy("block_x", "block_y").agg(
         F.collect_list(F.struct("srow", "scol")).alias("srcs"))
 
-    def to_kv(r):
-        w, h = int(r["width"]), int(r["height"])
-        cost = _px_np(r["pixels"]).reshape(h, w)
-        nod = r["nodata"]
-        if nod is not None and not np.isnan(nod):
-            cost = np.where(cost == float(nod), np.nan, cost)
+    def init(r, cost, bx, by):
+        h, w = cost.shape
         dist = np.full((h, w), np.inf)
         for s in (r["srcs"] or []):
-            rr = int(s["srow"]) - int(r["block_y"]) * block
-            cc = int(s["scol"]) - int(r["block_x"]) * block
+            rr = int(s["srow"]) - by * block
+            cc = int(s["scol"]) - bx * block
             if 0 <= rr < h and 0 <= cc < w:
                 dist[rr, cc] = 0.0
-        key = (r["dataset"], r["subdataset"], int(r["band"]),
-               int(r["block_x"]), int(r["block_y"]))
-        return key, {"w": w, "h": h, "cost": cost, "dist": dist,
-                     "srid": int(r["srid"]), "changed": True,
-                     "fresh": True}
-
-    init_kv = (_pack_pixels(
-        lvl0.join(src_cells, ["block_x", "block_y"], "left"))
-        .rdd.map(to_kv))
-
-    _STRIPS = {
-        (0, -1): (np.s_[:, :1], "c,e"), (0, 1): (np.s_[:, -1:], "c,w"),
-        (-1, 0): (np.s_[:1, :], "s,c"), (1, 0): (np.s_[-1:, :], "n,c"),
-        (-1, -1): (np.s_[:1, :1], "s,e"),
-        (-1, 1): (np.s_[:1, -1:], "s,w"),
-        (1, -1): (np.s_[-1:, :1], "n,e"),
-        (1, 1): (np.s_[-1:, -1:], "n,w"),
-    }
+        return {"cost": cost, "dist": dist}
 
     def strip_fn(key, st):
-        ds, sub, band, bx, by = key
-        for (dby, dbx), (sl, kind) in _STRIPS.items():
-            d = st["dist"][sl]
-            if np.isinf(d).all():
-                continue                   # nothing to propagate yet
-            yield ((ds, sub, band, bx + dbx, by + dby),
-                   (kind, st["cost"][sl].copy(), d.copy()))
+        # a strip with nothing reached yet has nothing to propagate
+        return (m for m in _send_strips(key, st, "cost", "dist")
+                if not np.isinf(m[1][2]).all())
 
     def relax_fn(key, st, payloads):
-        w, h = st["w"], st["h"]
-        # cache the freshest strip per direction: a relax must see
-        # the COMPLETE halo (not just this round's mail) or the
-        # wavefront refines one direction per round and the global
-        # round count multiplies (measured 128+ vs 34 rounds on the
-        # 1M-px probe before caching)
-        halo = dict(st.get("halo") or {})
-        for kind, sc, sd in payloads:
-            halo[kind] = (sc, sd)
-        dc = np.full((h + 2, w + 2), np.nan)    # cost canvas
-        dd = np.full((h + 2, w + 2), np.inf)    # dist canvas
-        dc[1:-1, 1:-1] = st["cost"]
-        dd[1:-1, 1:-1] = st["dist"]
-        for kind, (sc, sd) in halo.items():
-            sh, sw = sd.shape
-            ys, xs = kind.split(",")
-            y0 = {"n": 0, "c": 1, "s": h + 2 - sh}[ys]
-            x0 = {"w": 0, "c": 1, "e": w + 2 - sw}[xs]
-            dc[y0:y0 + sh, x0:x0 + sw] = sc
-            dd[y0:y0 + sh, x0:x0 + sw] = sd
+        # the complete cached halo, not just this round's mail: else
+        # the wavefront refines one direction per round and the
+        # global round count multiplies (measured 128+ vs 34 rounds
+        # on the 1M-px probe before caching)
+        halo = _merge_halo(st, payloads)
+        dc = _halo_canvas(st["cost"], halo, 0, np.nan)
+        dd = _halo_canvas(st["dist"], halo, 1, np.inf)
         # chamfer-style sweeps to the local fixpoint: row-
         # sequential, column-vectorized, exact in-row chain closure
         conv = _sweep_relax(dd, dc, use_diag, rt2)
         new_dist = dd[1:-1, 1:-1]
         chg = bool((new_dist < st["dist"]).any())
-        return {"w": w, "h": h, "cost": st["cost"], "halo": halo,
-                "dist": new_dist, "srid": st["srid"], "changed": chg,
-                "capped": not conv}
+        return dict(st, halo=halo, dist=new_dist, changed=chg,
+                    capped=not conv)
 
-    spark = blocks.sparkSession
-    _meta = lvl0.agg(F.count(F.lit(1)),
-                     F.max(F.col("width") * F.col("height"))).first()
-    final = _halo_fixpoint(spark, init_kv, strip_fn, relax_fn,
-                           max_rounds, n_blocks=_meta[0] or 0,
-                           px_per_block=_meta[1])
-
-    def to_row(kv):
-        (ds, sub, band, bx, by), st = kv
-        px = np.where(np.isinf(st["dist"]), np.nan, st["dist"])
-        return (ds, sub, band, 0, bx, by, st["w"], st["h"],
-                px.ravel().tobytes(), float("nan"), st["srid"])
-
-    return _unpack_pixels(spark.createDataFrame(
-        final.map(to_row), _BLOCK_SCHEMA_BIN, verifySchema=False))
+    return _raster_fixpoint(
+        lvl0, lvl0.join(src_cells, ["block_x", "block_y"], "left"),
+        init, strip_fn, relax_fn, max_rounds,
+        lambda st: np.where(np.isinf(st["dist"]), np.nan, st["dist"]),
+        f"cost_distance max_rounds={max_rounds}")
 
 
 # ESRI D8 codes in PRIORITY order (ties break to the first listed)
@@ -1759,9 +1513,8 @@ def flow_accumulation(dirs: DataFrame, max_rounds: int = 128,
     Input: ``flow_direction(border="clamp")`` output (BLOCK_SCHEMA,
     pixel = D8 code; 0 = pit, NaN = nodata).
 
-    Same iterative block-synchronous pattern (and the same honest
-    per-round shuffle cost — state + strips) as ``cost_distance``:
-    per-round (dir, acc) halo strips, in-block
+    Same iterative block-synchronous pattern as ``cost_distance``
+    on the fixpoint engine: per-round (dir, acc) halo strips, in-block
     fixpoint via masked shifted adds (acc = 1 + sum of inflows —
     monotone, so the driver's one-boolean-per-round loop terminates
     at the global fixpoint; rounds = longest flow path in BLOCKS).
@@ -1774,56 +1527,21 @@ def flow_accumulation(dirs: DataFrame, max_rounds: int = 128,
 
     lvl0 = dirs.filter(F.col("level") == 0)
 
-    def to_kv(r):
-        w, h = int(r["width"]), int(r["height"])
-        dr = _px_np(r["pixels"]).reshape(h, w)
-        nod = r["nodata"]
-        if nod is not None and not np.isnan(nod):
-            dr = np.where(dr == float(nod), np.nan, dr)
-        acc = np.where(np.isnan(dr), np.nan, 1.0)
-        key = (r["dataset"], r["subdataset"], int(r["band"]),
-               int(r["block_x"]), int(r["block_y"]))
-        return key, {"w": w, "h": h, "dir": dr, "acc": acc,
-                     "srid": int(r["srid"]), "changed": True,
-                     "fresh": True}
-
-    _STRIPS = {
-        (0, -1): (np.s_[:, :1], "c,e"), (0, 1): (np.s_[:, -1:], "c,w"),
-        (-1, 0): (np.s_[:1, :], "s,c"), (1, 0): (np.s_[-1:, :], "n,c"),
-        (-1, -1): (np.s_[:1, :1], "s,e"),
-        (-1, 1): (np.s_[:1, -1:], "s,w"),
-        (1, -1): (np.s_[-1:, :1], "n,e"),
-        (1, 1): (np.s_[-1:, -1:], "n,w"),
-    }
+    def init(r, dr, bx, by):
+        return {"dir": dr, "acc": np.where(np.isnan(dr), np.nan, 1.0)}
 
     def strip_fn(key, st):
-        ds, sub, band, bx, by = key
-        for (dby, dbx), (sl, kind) in _STRIPS.items():
-            yield ((ds, sub, band, bx + dbx, by + dby),
-                   (kind, st["dir"][sl].copy(), st["acc"][sl].copy()))
+        return _send_strips(key, st, "dir", "acc")
 
     def relax_fn(key, st, payloads):
-        w, h = st["w"], st["h"]
+        h, w = st["h"], st["w"]
         dr, old_acc = st["dir"], st["acc"]
         # the acc canvas is REBUILT (1 + inflow overwrites, unlike
-        # cost_distance's monotone min), so the halo must stay
-        # complete across rounds even though only CHANGED neighbors
-        # re-send: cache the last-received strip per direction in
-        # the block's own state
-        halo = dict(st.get("halo") or {})
-        for kind, sd, sa in payloads:
-            halo[kind] = (sd, sa)
-        cd = np.full((h + 2, w + 2), np.nan)
-        ca = np.full((h + 2, w + 2), 0.0)
-        cd[1:-1, 1:-1] = dr
-        ca[1:-1, 1:-1] = old_acc
-        for kind, (sd, sa) in halo.items():
-            sh, sw = sd.shape
-            ys, xs = kind.split(",")
-            y0 = {"n": 0, "c": 1, "s": h + 2 - sh}[ys]
-            x0 = {"w": 0, "c": 1, "e": w + 2 - sw}[xs]
-            cd[y0:y0 + sh, x0:x0 + sw] = sd
-            ca[y0:y0 + sh, x0:x0 + sw] = sa
+        # cost_distance's monotone min), so it needs the complete
+        # cached halo
+        halo = _merge_halo(st, payloads)
+        cd = _halo_canvas(dr, halo, 0, np.nan)
+        ca = _halo_canvas(old_acc, halo, 1, 0.0)
         ca = np.where(np.isnan(ca), 0.0, ca)
         nanmask = np.isnan(dr)
         conv = False
@@ -1842,25 +1560,12 @@ def flow_accumulation(dirs: DataFrame, max_rounds: int = 128,
         # exact element comparison: a nansum can round away a +1 in
         # a block whose total exceeds 2^53
         chg = not np.array_equal(acc, old_acc, equal_nan=True)
-        return {"w": w, "h": h, "dir": dr, "acc": acc,
-                "halo": halo, "srid": st["srid"], "changed": chg,
-                "capped": not conv}
+        return dict(st, acc=acc, halo=halo, changed=chg,
+                    capped=not conv)
 
-    spark = dirs.sparkSession
-    _meta = lvl0.agg(F.count(F.lit(1)),
-                     F.max(F.col("width") * F.col("height"))).first()
-    final = _halo_fixpoint(spark, _pack_pixels(lvl0).rdd.map(to_kv),
-                           strip_fn, relax_fn, max_rounds,
-                           n_blocks=_meta[0] or 0,
-                           px_per_block=_meta[1])
-
-    def to_row(kv):
-        (ds, sub, band, bx, by), st = kv
-        return (ds, sub, band, 0, bx, by, st["w"], st["h"],
-                st["acc"].ravel().tobytes(), float("nan"), st["srid"])
-
-    return _unpack_pixels(spark.createDataFrame(
-        final.map(to_row), _BLOCK_SCHEMA_BIN, verifySchema=False))
+    return _raster_fixpoint(lvl0, lvl0, init, strip_fn, relax_fn,
+                            max_rounds, lambda st: st["acc"],
+                            f"flow_accumulation max_rounds={max_rounds}")
 
 
 def equalize(blocks: DataFrame, levels: int = 256,
@@ -2035,73 +1740,33 @@ def basin_labels(dirs: DataFrame, max_rounds: int = 128,
     """
     from geohub_data_pipeline_spark.session import ship_package
     ship_package(dirs.sparkSession)
-    GID = 1 << 26
 
     lvl0 = dirs.filter(F.col("level") == 0)
 
-    def to_kv(r):
-        w, h = int(r["width"]), int(r["height"])
-        dr = _px_np(r["pixels"]).reshape(h, w)
-        nod = r["nodata"]
-        if nod is not None and not np.isnan(nod):
-            dr = np.where(dr == float(nod), np.nan, dr)
-        key = (r["dataset"], r["subdataset"], int(r["band"]),
-               int(r["block_x"]), int(r["block_y"]))
-        lab = np.full((h, w), -1, np.int64)
-        by, bx = int(r["block_y"]), int(r["block_x"])
-        rows = (by * block + np.arange(h))[:, None]
-        cols = (bx * block + np.arange(w))[None, :]
-        gid = rows * GID + cols
+    def init(r, dr, bx, by):
+        gid = _gids(bx, by, *dr.shape, block)
+        lab = np.full(dr.shape, -1, np.int64)
         lab[dr == 0.0] = gid[dr == 0.0]    # pits label themselves
         lab[np.isnan(dr)] = -9             # nodata
-        return key, {"w": w, "h": h, "dir": dr, "lab": lab,
-                     "gid": gid, "srid": int(r["srid"]),
-                     "changed": True, "fresh": True}
-
-    _STRIPS = {
-        (0, -1): (np.s_[:, :1], "c,e"), (0, 1): (np.s_[:, -1:], "c,w"),
-        (-1, 0): (np.s_[:1, :], "s,c"), (1, 0): (np.s_[-1:, :], "n,c"),
-        (-1, -1): (np.s_[:1, :1], "s,e"),
-        (-1, 1): (np.s_[:1, -1:], "s,w"),
-        (1, -1): (np.s_[-1:, :1], "n,e"),
-        (1, 1): (np.s_[-1:, -1:], "n,w"),
-    }
+        return {"dir": dr, "lab": lab, "gid": gid}
 
     def strip_fn(key, st):
-        ds, sub, band, bx, by = key
-        for (dby, dbx), (sl, kind) in _STRIPS.items():
-            yield ((ds, sub, band, bx + dbx, by + dby),
-                   (kind, st["lab"][sl].copy()))
+        return _send_strips(key, st, "lab")
 
     def relax_fn(key, st, payloads):
-        w, h = st["w"], st["h"]
-        halo = dict(st.get("halo") or {})
-        for kind, sl in payloads:
-            halo[kind] = sl
+        h, w = st["h"], st["w"]
+        halo = _merge_halo(st, payloads)
         H, W = h + 2, w + 2
-        lab = np.full((H, W), -1, np.int64)
-        lab[1:-1, 1:-1] = st["lab"]
-        for kind, sl in halo.items():
-            sh, sw = sl.shape
-            ys, xs = kind.split(",")
-            y0 = {"n": 0, "c": 1, "s": H - sh}[ys]
-            x0 = {"w": 0, "c": 1, "e": W - sw}[xs]
-            lab[y0:y0 + sh, x0:x0 + sw] = sl
-        dirc = np.full((H, W), np.nan)
-        dirc[1:-1, 1:-1] = st["dir"]
         # canvas coverage: interior + every halo cell a PRESENT
-        # strip wrote.  A cell whose one-step target is uncovered
-        # points off the raster (round-1 mail covers every existing
-        # neighbor side, so an uncovered halo cell has no block
-        # behind it): it is its own outlet.
-        covered = np.zeros((H, W), bool)
-        covered[1:-1, 1:-1] = True
-        for kind, sl in halo.items():
-            sh, sw = sl.shape
-            ys, xs = kind.split(",")
-            y0 = {"n": 0, "c": 1, "s": H - sh}[ys]
-            x0 = {"w": 0, "c": 1, "e": W - sw}[xs]
-            covered[y0:y0 + sh, x0:x0 + sw] = True
+        # strip wrote (labels are >= -9, so the fill marks the rest).
+        # A cell whose one-step target is uncovered points off the
+        # raster (round-1 mail covers every existing neighbor side,
+        # so an uncovered halo cell has no block behind it): it is
+        # its own outlet.
+        lab = _halo_canvas(st["lab"], halo, 0, -10)
+        covered = lab != -10
+        lab[~covered] = -1
+        dirc = _halo_canvas(st["dir"], {}, 0, np.nan)
         idx = np.arange(H * W).reshape(H, W)
         T = idx.copy()
         for _nm, code, dy, dx, _d in _D8:
@@ -2129,27 +1794,11 @@ def basin_labels(dirs: DataFrame, max_rounds: int = 128,
         new_lab[st["lab"] == -9] = -9      # nodata stays nodata
         # pits keep their own gid (their terminal is themselves)
         chg = not np.array_equal(new_lab, st["lab"])
-        return {"w": w, "h": h, "dir": st["dir"], "lab": new_lab,
-                "gid": st["gid"], "halo": halo,
-                "srid": st["srid"], "changed": chg}
+        return dict(st, lab=new_lab, halo=halo, changed=chg)
 
-    spark = dirs.sparkSession
-    _meta = lvl0.agg(F.count(F.lit(1)),
-                     F.max(F.col("width") * F.col("height"))).first()
-    final = _halo_fixpoint(spark, _pack_pixels(lvl0).rdd.map(to_kv),
-                           strip_fn, relax_fn, max_rounds,
-                           n_blocks=_meta[0] or 0,
-                           px_per_block=_meta[1])
-
-    def to_row(kv):
-        (ds, sub, band, bx, by), st = kv
-        px = st["lab"].astype(np.float64)
-        px[st["lab"] < 0] = np.nan         # nodata / unresolved
-        return (ds, sub, band, 0, bx, by, st["w"], st["h"],
-                px.ravel().tobytes(), float("nan"), st["srid"])
-
-    return _unpack_pixels(spark.createDataFrame(
-        final.map(to_row), _BLOCK_SCHEMA_BIN, verifySchema=False))
+    return _raster_fixpoint(lvl0, lvl0, init, strip_fn, relax_fn,
+                            max_rounds, _label_px,
+                            f"basin_labels max_rounds={max_rounds}")
 
 
 def clump_labels(blocks: DataFrame, diagonal: bool = False,
@@ -2173,41 +1822,18 @@ def clump_labels(blocks: DataFrame, diagonal: bool = False,
     """
     from geohub_data_pipeline_spark.session import ship_package
     ship_package(blocks.sparkSession)
-    GID = 1 << 26
     use_diag = bool(diagonal)
 
     lvl0 = blocks.filter(F.col("level") == 0)
 
-    def to_kv(r):
-        w, h = int(r["width"]), int(r["height"])
-        val = _px_np(r["pixels"]).reshape(h, w)
-        nod = r["nodata"]
-        if nod is not None and not np.isnan(nod):
-            val = np.where(val == float(nod), np.nan, val)
-        by, bx = int(r["block_y"]), int(r["block_x"])
-        gid = ((by * block + np.arange(h))[:, None] * GID
-               + (bx * block + np.arange(w))[None, :])
+    def init(r, val, bx, by):
+        gid = _gids(bx, by, *val.shape, block)
         lab = np.where(np.isnan(val), np.int64(-9),
                        gid).astype(np.int64)
-        key = (r["dataset"], r["subdataset"], int(r["band"]), bx, by)
-        return key, {"w": w, "h": h, "val": val, "lab": lab,
-                     "srid": int(r["srid"]), "changed": True,
-                     "fresh": True}
-
-    _STRIPS = {
-        (0, -1): (np.s_[:, :1], "c,e"), (0, 1): (np.s_[:, -1:], "c,w"),
-        (-1, 0): (np.s_[:1, :], "s,c"), (1, 0): (np.s_[-1:, :], "n,c"),
-        (-1, -1): (np.s_[:1, :1], "s,e"),
-        (-1, 1): (np.s_[:1, -1:], "s,w"),
-        (1, -1): (np.s_[-1:, :1], "n,e"),
-        (1, 1): (np.s_[-1:, -1:], "n,w"),
-    }
+        return {"val": val, "lab": lab}
 
     def strip_fn(key, st):
-        ds, sub, band, bx, by = key
-        for (dby, dbx), (sl, kind) in _STRIPS.items():
-            yield ((ds, sub, band, bx + dbx, by + dby),
-                   (kind, st["val"][sl].copy(), st["lab"][sl].copy()))
+        return _send_strips(key, st, "val", "lab")
 
     def _roots(val, h, w):
         """In-block union-find root per pixel (path halving)."""
@@ -2242,9 +1868,7 @@ def clump_labels(blocks: DataFrame, diagonal: bool = False,
 
     def relax_fn(key, st, payloads):
         w, h = st["w"], st["h"]
-        halo = dict(st.get("halo") or {})
-        for kind, sv, sl in payloads:
-            halo[kind] = (sv, sl)
+        halo = _merge_halo(st, payloads)
         roots = st.get("roots")
         if roots is None:
             roots = _roots(st["val"], h, w)
@@ -2296,27 +1920,12 @@ def clump_labels(blocks: DataFrame, diagonal: bool = False,
                     rmin[roots[i]] = min(rmin[roots[i]], l0)
         new_lab = np.where(lab >= 0, rmin[roots], lab)
         chg = bool((new_lab != lab).any())
-        return {"w": w, "h": h, "val": val,
-                "lab": new_lab.reshape(h, w), "roots": roots,
-                "halo": halo, "srid": st["srid"], "changed": chg}
+        return dict(st, lab=new_lab.reshape(h, w), roots=roots,
+                    halo=halo, changed=chg)
 
-    spark = blocks.sparkSession
-    _meta = lvl0.agg(F.count(F.lit(1)),
-                     F.max(F.col("width") * F.col("height"))).first()
-    final = _halo_fixpoint(spark, _pack_pixels(lvl0).rdd.map(to_kv),
-                           strip_fn, relax_fn, max_rounds,
-                           n_blocks=_meta[0] or 0,
-                           px_per_block=_meta[1])
-
-    def to_row(kv):
-        (ds, sub, band, bx, by), st = kv
-        px = st["lab"].astype(np.float64)
-        px[st["lab"] < 0] = np.nan
-        return (ds, sub, band, 0, bx, by, st["w"], st["h"],
-                px.ravel().tobytes(), float("nan"), st["srid"])
-
-    return _unpack_pixels(spark.createDataFrame(
-        final.map(to_row), _BLOCK_SCHEMA_BIN, verifySchema=False))
+    return _raster_fixpoint(lvl0, lvl0, init, strip_fn, relax_fn,
+                            max_rounds, _label_px,
+                            f"clump_labels max_rounds={max_rounds}")
 
 
 def _clump_adjacency(lab_blocks: DataFrame,

@@ -212,7 +212,7 @@ def kll_quantiles_grouped(df: DataFrame, group_col: str,
     sk_rows = df.select(group_col, value_col).mapInPandas(
         build, f"{group_col} string, level int, vals array<double>")
 
-    def finish(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def finish(key, pdf):
         s = KLL.from_rows(
             list(zip(pdf["level"], pdf["vals"])), kk)
         return pd.DataFrame(

@@ -6150,7 +6150,7 @@ ORDER BY row, col
 @query("raster_basin_labels", "pipeline",
        "geo analytics: D8 watershed/basin labeling — pointer-doubling"
        " per block + 1-px label halo on the partitioning-preserving "
-       "state store (raster._halo_fixpoint, its third consumer after "
+       "state store (fixpoint._halo_fixpoint, its third consumer after "
        "cost_distance/flow_accumulation)", _BASIN_SQL)
 def raster_basin_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two drainage basins over a 128x128 / 2x2-block D8 field: the
@@ -6203,7 +6203,7 @@ ORDER BY row, col
        "geo analytics: clump/region labeling (GRASS r.clump / ESRI "
        "Region Group) — cached in-block union-find + 1-px label halo "
        "on the partitioning-preserving state store "
-       "(raster._halo_fixpoint, fourth consumer)", _CLUMP_SQL)
+       "(fixpoint._halo_fixpoint, fourth consumer)", _CLUMP_SQL)
 def raster_clump_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-value regions over a 128x128 / 2x2-block raster:
     3-wide alternating vertical stripes cut by a full-width band at

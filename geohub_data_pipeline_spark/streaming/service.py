@@ -4,8 +4,9 @@ Reference behavior being reproduced (SURVEY.md §2.4, §3 EP1; all ref
 cites into /root/reference/):
 
 * queue poll, <=1 message in flight, exit when drained
-  (ingest/ingest.py:41-58)            -> file stream source,
-  ``maxFilesPerTrigger=1`` + ``trigger(availableNow=True)`` (X1/X2)
+  (ingest/ingest.py:41-58)            -> the spool-queue stream source
+  (sources/queue_source.py), one ``trigger(availableNow=True)`` start
+  per receive, stopping on an empty receive (X1/X2)
 * message parse "url;token;join=bool" (ingest/ingest.py:62-66) -> S2
   projection; parse failure dead-letters (ingest/ingest.py:197-207)
   -> quarantine rows (X7/K11)
@@ -52,21 +53,6 @@ CANCEL_SCHEMA = T.StructType([
 ])
 
 LEDGER_COLUMNS = ["dataset", "kind", "stage", "progress", "content", "ts"]
-
-
-def message_stream(spark: SparkSession, messages_dir: str,
-                   max_files_per_trigger: int = 1) -> DataFrame:
-    """File-based stand-in for the Service Bus queue (S1).
-
-    ``maxFilesPerTrigger=1`` reproduces the reference's one-message-
-    in-flight backpressure (X2); swap for a Kafka/EventHubs source in
-    production without touching the pipeline below.
-    """
-    return (
-        spark.readStream.schema(MESSAGE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(messages_dir)
-    )
 
 
 def parse_messages(df: DataFrame) -> DataFrame:

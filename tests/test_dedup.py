@@ -321,6 +321,15 @@ def test_jaccard_for_pairs_tokenizes_pairs_not_corpus(spark):
     assert "Generate explode" in plan
 
 
+def _force_distributed(monkeypatch, edges_per_block=32):
+    """The engine's distributed leg with several hash blocks on a tiny
+    input: the gate says no, and a block holds few edges."""
+    from geohub_data_pipeline_spark.operators import fixpoint
+
+    monkeypatch.setattr(D, "_fits_one_task", lambda df: False)
+    monkeypatch.setattr(fixpoint, "_EDGES_PER_BLOCK", edges_per_block)
+
+
 def test_cc_in_task_matches_distributed(spark, monkeypatch):
     """r12: the P=1 in-task hash-to-min fixpoint emits bit-identical
     labels to the distributed round loop (forced via the gate), and
@@ -335,7 +344,7 @@ def test_cc_in_task_matches_distributed(spark, monkeypatch):
     assert "MapInPandas" in (
         local._jdf.queryExecution().executedPlan().toString())
     got_local = {(r.node, r.label) for r in local.collect()}
-    monkeypatch.setattr(D, "_fits_one_task", lambda df: False)
+    _force_distributed(monkeypatch)
     dist = D.connected_components(e)
     assert "MapInPandas" not in (
         dist._jdf.queryExecution().executedPlan().toString())
@@ -377,7 +386,47 @@ def test_pagerank_in_task_matches_distributed(spark, monkeypatch):
     df = spark.createDataFrame(rows, "src long, dst long")
     got_local = {(r.node, r.rank_fp)
                  for r in pagerank_fixed_point(df, n_iters=3).collect()}
-    monkeypatch.setattr(D, "_fits_one_task", lambda df: False)
+    _force_distributed(monkeypatch)
     got_dist = {(r.node, r.rank_fp)
                 for r in pagerank_fixed_point(df, n_iters=3).collect()}
     assert got_local == got_dist
+
+
+def test_cc_iteration_cap_raises_in_both_legs(spark, monkeypatch):
+    """A 4-node chain needs 3 min-label rounds: max_iters=1 raises
+    on the in-task and the distributed leg; a cap equal to the rounds
+    needed does not."""
+    import pytest
+
+    e = _edges(spark, [(i, i + 1) for i in range(3)])
+    for forced in (False, True):
+        if forced:
+            _force_distributed(monkeypatch, edges_per_block=2)
+        with pytest.raises(Exception,
+                           match="connected_components max_iters=1"):
+            D.connected_components(e, max_iters=1).count()
+        got = {r.node: r.label
+               for r in D.connected_components(e, max_iters=3).collect()}
+        assert got == {i: 0 for i in range(4)}
+
+
+def test_altcc_iteration_cap_raises_in_both_legs(spark, monkeypatch):
+    """A 33-node chain takes more than two star rounds: max_iters=2
+    raises on the in-task and the distributed leg."""
+    import pytest
+
+    e = _edges(spark, [(i, i + 1) for i in range(100, 132)])
+    with pytest.raises(Exception, match="alternating_cc max_iters=2"):
+        D.alternating_cc(e, max_iters=2).count()
+    monkeypatch.setattr(D, "_fits_one_task", lambda df: False)
+    with pytest.raises(Exception, match="alternating_cc max_iters=2"):
+        D.alternating_cc(e, max_iters=2).count()
+
+
+def test_cc_labels_beyond_2_62(spark):
+    """Node ids are labels: ids past 2^62 (hashed fragment ids, as in
+    mvt_border_weld) keep their rows — both legs share the emit."""
+    big = (1 << 63) - 10
+    e = _edges(spark, [(big, big + 1), (big + 1, big + 2), (5, big)])
+    got = {r.node: r.label for r in D.connected_components(e).collect()}
+    assert got == {n: 5 for n in (5, big, big + 1, big + 2)}

@@ -65,7 +65,7 @@ def test_bfs_hops_max_hops_raises_on_truncation(spark):
     matches the message."""
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "src long, dst long")
-    with pytest.raises(Exception, match="max_hops"):
+    with pytest.raises(Exception, match="bfs_hops max_hops=2"):
         G.bfs_hops(df, source=0, max_hops=2).count()
 
 
@@ -224,7 +224,7 @@ def test_kcore_raises_on_iteration_cap(spark):
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long")
     # action-time raise on the in-task path (message preserved)
-    with pytest.raises(Exception, match="fixpoint"):
+    with pytest.raises(Exception, match="kcore_members max_iters=3"):
         G.kcore_members(path, k=2, max_iters=3).count()
     # with enough rounds the 2-core of a path is empty
     assert G.kcore_members(path, k=2, max_iters=30).count() == 0
@@ -264,7 +264,7 @@ def test_sssp_matches_dijkstra_reference(spark):
     # (action-time raise on the in-task path, message preserved)
     chain = spark.createDataFrame(
         [(i, i + 1, 1) for i in range(10)], "src long, dst long, w long")
-    with pytest.raises(Exception, match="converge"):
+    with pytest.raises(Exception, match="sssp_bellman_ford max_rounds=3"):
         G.sssp_bellman_ford(chain, source=0, max_rounds=3).count()
 
 
@@ -273,8 +273,13 @@ def test_sssp_matches_dijkstra_reference(spark):
 # parity, the same pin the halo engine carries (guide §1.2).
 # ---------------------------------------------------------------------------
 
-def _force_distributed(monkeypatch):
+def _force_distributed(monkeypatch, edges_per_block=32):
+    """The engine's distributed leg with several hash blocks on a tiny
+    input: the gate says no, and a block holds few edges."""
+    from geohub_data_pipeline_spark.operators import fixpoint
+
     monkeypatch.setattr(G, "_fits_one_task", lambda df: False)
+    monkeypatch.setattr(fixpoint, "_EDGES_PER_BLOCK", edges_per_block)
 
 
 def test_bfs_in_task_matches_distributed(spark, monkeypatch):
@@ -329,3 +334,29 @@ def test_lpa_in_task_matches_distributed(spark, monkeypatch):
     got_dist = {(r.node, r.label)
                 for r in G.label_propagation(df, rounds=3).collect()}
     assert got_local == got_dist
+
+
+def test_sssp_distributed_rounds_are_frontier_incremental(
+        spark, monkeypatch, caplog):
+    """Forced distributed SSSP (four hash blocks): the engine's
+    per-round record (one DEBUG line per round: round, changed
+    vertices, wall) shows only the frontier sending — a fan of 4 then
+    one vertex a round down a 5-long chain — never all |V| vertices
+    again."""
+    import logging
+
+    fan = [(0, i, 1) for i in range(1, 5)] + [(i, 5, 1) for i in range(1, 5)]
+    chain = [(i, i + 1, 1) for i in range(5, 10)]
+    df = spark.createDataFrame(fan + chain, "src long, dst long, w long")
+    _force_distributed(monkeypatch, edges_per_block=4)
+    caplog.set_level(logging.DEBUG,
+                     logger="geohub_data_pipeline_spark.operators.fixpoint")
+    got = {r.node: r.dist
+           for r in G.sssp_bellman_ford(df, source=0).collect()}
+    assert got == {0: 0, **{i: 1 for i in range(1, 5)},
+                   **{i: i - 3 for i in range(5, 11)}}
+    changed = [r.args[1] for r in caplog.records
+               if r.name.endswith("fixpoint")]
+    assert changed[:3] == [1, 4, 1]          # source, fan, chain head
+    assert all(c == 1 for c in changed[2:-1]) and changed[-1] == 0
+    assert sum(changed) == len(got)          # each vertex sends once

@@ -972,3 +972,39 @@ def test_cost_distance_p1_fast_path_matches_distributed(spark, monkeypatch):
     monkeypatch.setattr(R, "_halo_fixpoint", forced)
     dist = run()                         # forced P = 4 -> round loop
     assert np.array_equal(local, dist, equal_nan=True)
+
+
+def test_halo_round_cap_raises_in_both_legs(spark, monkeypatch):
+    """A 1x3 row of 4-px blocks with the source in the first block:
+    the wavefront crosses one block per round, 2 rounds.  max_rounds=1
+    raises in the in-task (P=1) leg and in the forced P=4 round loop;
+    a cap equal to the 2 rounds needed does not."""
+    import pytest
+
+    b = 4
+    rows = [("d", None, 1, 0, bx, 0, b, b, [1.0] * (b * b), None, 4326)
+            for bx in range(3)]
+    blocks = spark.createDataFrame(
+        rows, "dataset string, subdataset string, band int, "
+              "level int, block_x int, block_y int, width int, "
+              "height int, pixels array<double>, nodata double, "
+              "srid int")
+    sources = spark.createDataFrame([(0, 0)], "row long, col long")
+
+    def run(cap):
+        return R.cost_distance(blocks, sources, block=b,
+                               max_rounds=cap).count()
+
+    orig = R._halo_fixpoint
+
+    def forced(spark_, init_kv, strip_fn, relax_fn, max_rounds, **kw):
+        kw.pop("num_partitions", None)
+        return orig(spark_, init_kv, strip_fn, relax_fn, max_rounds,
+                    num_partitions=4, **kw)
+
+    for leg in ("in-task", "distributed"):
+        if leg == "distributed":
+            monkeypatch.setattr(R, "_halo_fixpoint", forced)
+        with pytest.raises(Exception, match="cost_distance max_rounds=1"):
+            run(1)
+        assert run(2) == 3
