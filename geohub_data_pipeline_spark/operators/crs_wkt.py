@@ -29,10 +29,11 @@ Handled per the WKT1 spec:
   shift if a TOWGS84 is present.
 
 Family coverage matches GDAL's WKT1 PROJECTION names plus the common
-ESRI aliases.  All projection math lives in ``operators/crs.py`` and
-is pinned by published IOGP GN7-2 worked examples in
-``tests/test_crs.py``; this module only parses and dispatches, so it
-is plain stdlib and safe inside Arrow-batched executor kernels.
+ESRI aliases.  All projection math lives in ``operators/crs.py`` (one
+numpy kernel per family) and is pinned by published IOGP GN7-2 worked
+examples in ``tests/test_crs.py``; this module only parses and
+dispatches, so a resolved pair takes coordinate arrays like the
+table kernels do.
 """
 
 from __future__ import annotations
@@ -40,15 +41,7 @@ from __future__ import annotations
 import math
 
 from geohub_data_pipeline_spark.operators.crs import (
-    _make_aea,
-    _make_homvb,
-    _make_krovak,
-    _make_laea,
-    _make_lcc2,
-    _make_merc,
-    _make_ps,
-    _make_sterea,
-    _make_tm,
+    _FAMILIES,
     _with_datum,
     merc_2sp_k0,
 )
@@ -374,18 +367,12 @@ _PSP = ("pseudostandardparallel1", "latitudeofpseudostandardparallel")
 
 
 def _build_projected(proj_name: str, params: dict, ellps, ang: float,
-                     u: float, makers=None):
+                     u: float):
     """(fwd, inv) in METERS from the projection method name + raw
-    PARAMETER dict.  ``ang`` converts angle params to degrees.
-    ``makers`` picks the construction backend: None = the scalar
-    family table (crs.py); pass ``crs_np`` makers for array
-    kernels — the parsing/parameter logic is shared either way."""
-    if makers is None:
-        from geohub_data_pipeline_spark.operators.crs import _FAMILIES
-        makers = _FAMILIES
+    PARAMETER dict.  ``ang`` converts angle params to degrees."""
 
     def mk(family, **kw):
-        return makers[family](ellps, **kw)
+        return _FAMILIES[family](ellps, **kw)
 
     def angle(names, default=0.0):
         v = _get(params, names)
@@ -506,39 +493,27 @@ def _build_projected(proj_name: str, params: dict, ellps, ang: float,
     return None
 
 
-def _backends(use_np: bool):
-    if use_np:
-        from geohub_data_pipeline_spark.operators import crs_np
-        makers = dict(crs_np._FAMILIES_NP)
-        makers["tm"] = crs_np._make_tm_np
-        return makers, crs_np._with_datum_np
-    from geohub_data_pipeline_spark.operators.crs import _FAMILIES
-    return _FAMILIES, _with_datum
-
-
-def pair_from_wkt(wkt: str, use_np: bool = False):
+def pair_from_wkt(wkt: str):
     """(fwd, inv) closures for a CRS text — WKT1, WKT2 (ISO 19162),
     or PROJJSON — WGS84 (lon, lat) degrees on the geographic side and
     CRS-native units on the projected side; None if the projection
-    method is outside the closed-form families.  ``use_np=True``
-    builds ARRAY kernels (operators/crs_np.py makers + vectorized
-    datum ladder) from the same parsed parameters; the
-    prime-meridian/unit wrappers below are plain arithmetic and work
-    on both.
+    method is outside the closed-form families.  The pair is built
+    from the array kernels of ``operators/crs.py``; the
+    prime-meridian/unit wrappers below are plain arithmetic, so the
+    pair takes arrays (or floats) like the table kernels.
 
     Raises ``ValueError`` on malformed input (callers treat that the
     same as None under ``-skipfailures``)."""
-    makers, with_datum = _backends(use_np)
     if wkt.lstrip().startswith("{"):
-        return pair_from_projjson(wkt, use_np=use_np)
+        return pair_from_projjson(wkt)
     root = parse_wkt(wkt)
     rname = root.name.upper()
 
     if rname in ("PROJCRS", "PROJECTEDCRS"):
-        return _pair_from_wkt2_projected(root, makers, with_datum)
+        return _pair_from_wkt2_projected(root)
 
     if rname == "BOUNDCRS":
-        return _pair_from_boundcrs(root, makers, with_datum, use_np)
+        return _pair_from_boundcrs(root)
 
     if rname in ("GEOGCS", "GEOGCRS", "GEOGRAPHICCRS", "GEODCRS"):
         ellps = _spheroid(root)
@@ -558,7 +533,7 @@ def pair_from_wkt(wkt: str, use_np: bool = False):
 
         if helmert is not None:
             # datum-shift the lon/lat through ECEF; identity "grid"
-            fwd_d, inv_d = with_datum(
+            fwd_d, inv_d = _with_datum(
                 lambda lon, lat: (lon, lat),
                 lambda x, y: (x, y), ellps, helmert)
             return (lambda lon, lat: fwd_g(*fwd_d(lon, lat)),
@@ -580,8 +555,7 @@ def pair_from_wkt(wkt: str, use_np: bool = False):
         raise ValueError("wkt: PROJCS without PROJECTION")
     params = _params_of(root)
 
-    made = _build_projected(str(proj.values[0]), params, ellps, ang,
-                            u, makers=makers)
+    made = _build_projected(str(proj.values[0]), params, ellps, ang, u)
     if made is None:
         return None
     fwd_m, inv_m = made
@@ -600,7 +574,7 @@ def pair_from_wkt(wkt: str, use_np: bool = False):
 
     helmert = _towgs84(geogcs)
     if helmert is not None:
-        fwd_m, inv_m = with_datum(fwd_m, inv_m, ellps, helmert)
+        fwd_m, inv_m = _with_datum(fwd_m, inv_m, ellps, helmert)
 
     if u != 1.0:
         base_fwd2, base_inv2 = fwd_m, inv_m
@@ -619,12 +593,12 @@ _PARSE_ERRORS = (ValueError, IndexError, KeyError, TypeError,
                  ZeroDivisionError, AttributeError)
 
 
-def to_lonlat_wkt(wkt: str, use_np: bool = False):
+def to_lonlat_wkt(wkt: str):
     """``f(x, y) -> (lon, lat)`` for a WKT1/WKT2/PROJJSON CRS, else
     None (malformed input of any of the three grammars quarantines,
     never crashes a stage)."""
     try:
-        made = pair_from_wkt(wkt, use_np=use_np)
+        made = pair_from_wkt(wkt)
     except _PARSE_ERRORS:
         return None
     return made[1] if made else None
@@ -672,8 +646,7 @@ def _wrap_primem(fwd_m, inv_m, primem: float):
     return fwd_p, inv_p
 
 
-def _pair_from_wkt2_projected(root: Node, makers, with_datum,
-                              apply_datum: bool = True):
+def _pair_from_wkt2_projected(root: Node, apply_datum: bool = True):
     """PROJCRS[...] (ISO 19162): BASEGEOGCRS + CONVERSION[METHOD,
     PARAMETER...] + CS/AXIS units.  Parameters arrive normalized to
     degrees/meters (per-parameter units), so the shared dispatcher
@@ -700,7 +673,7 @@ def _pair_from_wkt2_projected(root: Node, makers, with_datum,
     params = _params_of_wkt2(conv)
     # per-parameter units already folded in: identity conversions
     made = _build_projected(str(method.values[0]), params, ellps,
-                            ang=math.pi / 180.0, u=1.0, makers=makers)
+                            ang=math.pi / 180.0, u=1.0)
     if made is None:
         return None
     fwd_m, inv_m = made
@@ -716,7 +689,7 @@ def _pair_from_wkt2_projected(root: Node, makers, with_datum,
     # would otherwise apply the shift twice
     helmert = _towgs84(geog) if apply_datum else None
     if helmert is not None:
-        fwd_m, inv_m = with_datum(fwd_m, inv_m, ellps, helmert)
+        fwd_m, inv_m = _with_datum(fwd_m, inv_m, ellps, helmert)
 
     u_out = _unit_factor(root, 1.0, kinds=("LENGTHUNIT", "UNIT"))
     return _wrap_unit(fwd_m, inv_m, u_out)
@@ -731,7 +704,7 @@ _HELMERT_SLOTS = {
 }
 
 
-def _pair_from_boundcrs(root: Node, makers, with_datum, use_np: bool):
+def _pair_from_boundcrs(root: Node):
     """BOUNDCRS[SOURCECRS[...], TARGETCRS[...],
     ABRIDGEDTRANSFORMATION[...]]: resolve the source CRS, then apply
     the Helmert parameters (EPSG 9606 position-vector, datum->WGS84
@@ -764,8 +737,7 @@ def _pair_from_boundcrs(root: Node, makers, with_datum, use_np: bool):
     # by dispatching through the same machinery
     inner_name = inner.name.upper()
     if inner_name in ("PROJCRS", "PROJECTEDCRS"):
-        made = _pair_from_wkt2_projected(inner, makers, with_datum,
-                                         apply_datum=False)
+        made = _pair_from_wkt2_projected(inner, apply_datum=False)
     else:
         raise ValueError(
             f"wkt2: BOUNDCRS source {inner_name} not supported")
@@ -777,7 +749,7 @@ def _pair_from_boundcrs(root: Node, makers, with_datum, use_np: bool):
         geog = (inner.child("BASEGEOGCRS")
                 or inner.child("BASEGEODCRS"))
         ellps = _spheroid(geog)
-        fwd_m, inv_m = with_datum(
+        fwd_m, inv_m = _with_datum(
             fwd_m, inv_m, ellps,
             (-dx, -dy, -dz, -ds, -rx, -ry, -rz))
     return fwd_m, inv_m
@@ -824,7 +796,7 @@ def _projjson_ellipsoid(datum: dict) -> tuple[float, float]:
     return a, f
 
 
-def pair_from_projjson(obj, use_np: bool = False):
+def pair_from_projjson(obj):
     """(fwd, inv) for a PROJJSON CRS (GeoParquet's ``geo`` metadata
     and pyproj's JSON export) — the same closed-form families as the
     WKT paths; None when the method is outside them."""
@@ -834,12 +806,10 @@ def pair_from_projjson(obj, use_np: bool = False):
         obj = _json.loads(obj)
     if not isinstance(obj, dict):
         raise ValueError("projjson: not an object")
-    makers, with_datum = _backends(use_np)
     t = str(obj.get("type", ""))
 
     if t == "BoundCRS":
-        inner = pair_from_projjson(obj.get("source_crs"),
-                                   use_np=use_np)
+        inner = pair_from_projjson(obj.get("source_crs"))
         if inner is None:
             return None
         fwd_m, inv_m = inner
@@ -862,7 +832,7 @@ def pair_from_projjson(obj, use_np: bool = False):
             ellps = _projjson_ellipsoid(
                 geog.get("datum") or geog.get("datum_ensemble"))
             dx, dy, dz, rx, ry, rz, ds = vals
-            fwd_m, inv_m = with_datum(
+            fwd_m, inv_m = _with_datum(
                 fwd_m, inv_m, ellps,
                 (-dx, -dy, -dz, -ds, -rx, -ry, -rz))
         return fwd_m, inv_m
@@ -909,7 +879,7 @@ def pair_from_projjson(obj, use_np: bool = False):
             v *= _projjson_unit(unit, False)
         params[_norm(name)] = v
     made = _build_projected(method, params, ellps,
-                            ang=math.pi / 180.0, u=1.0, makers=makers)
+                            ang=math.pi / 180.0, u=1.0)
     if made is None:
         return None
     fwd_m, inv_m = made

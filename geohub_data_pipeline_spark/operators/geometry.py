@@ -947,129 +947,18 @@ def make_valid_wkb(buf: bytes) -> tuple[bytes, bool]:
 _R = 6378137.0
 
 
-def mercator_to_lonlat(x: float, y: float) -> tuple[float, float]:
-    lon = math.degrees(x / _R)
-    lat = math.degrees(2.0 * math.atan(math.exp(y / _R)) - math.pi / 2.0)
-    return lon, lat
-
-
 def lonlat_to_mercator(lon: float, lat: float) -> tuple[float, float]:
     x = _R * math.radians(lon)
     y = _R * math.log(math.tan(math.pi / 4.0 + math.radians(lat) / 2.0))
     return x, y
 
 
-_WKT_INV_CACHE: dict[str, object] = {}
-_WKT_INV_NP_CACHE: dict[str, object] = {}
-
-
-def _wkt_inverse(wkt: str):
-    """Cached ``(x, y) -> (lon, lat)`` from a WKT1 CRS string, or
-    None if the projection method is outside the closed-form
-    families (operators/crs_wkt.py)."""
-    if wkt not in _WKT_INV_CACHE:
-        from geohub_data_pipeline_spark.operators import crs_wkt as _cw
-        _WKT_INV_CACHE[wkt] = _cw.to_lonlat_wkt(wkt)
-    return _WKT_INV_CACHE[wkt]
-
-
-def _reproject_coords(coords: list[float], src_srid: int,
-                      crs_wkt: str | None = None) -> list[float]:
-    if src_srid == 4326:
-        return coords
-    if src_srid == 3857:
-        out = []
-        for i in range(0, len(coords), 2):
-            lon, lat = mercator_to_lonlat(coords[i], coords[i + 1])
-            out += [lon, lat]
-        return out
-    from geohub_data_pipeline_spark.operators import crs as _crs
-    native = _crs.to_lonlat(src_srid) if src_srid > 0 else None
-    if native is not None:      # UTM zones + _CRS_TABLE, closed-form
-        out = []
-        for i in range(0, len(coords), 2):
-            lon, lat = native(coords[i], coords[i + 1])
-            out += [lon, lat]
-        return out
-    if crs_wkt:                 # embedded WKT1 (e.g. .prj sidecar)
-        inv = _wkt_inverse(crs_wkt)
-        if inv is not None:
-            out = []
-            for i in range(0, len(coords), 2):
-                lon, lat = inv(coords[i], coords[i + 1])
-                out += [lon, lat]
-            return out
-    try:  # remaining CRS: optional pyproj path
-        from pyproj import Transformer  # noqa: PLC0415
-    except ImportError as exc:
-        raise NotImplementedError(
-            f"reproject from EPSG:{src_srid} needs pyproj (not installed); "
-            "supported natively: 4326 (no-op), 3857 (spherical Mercator), "
-            "UTM 326xx/327xx/258xx, the TM/LCC/LAEA/Albers parameter "
-            "table (27700, 2193, 5070, 102008, 3978, 3035, 2154, ...), "
-            "and any embedded WKT1 CRS in the closed-form families "
-            "(operators/crs_wkt.py)"
-        ) from exc
-    if src_srid <= 0:
-        raise NotImplementedError(
-            "reproject: no EPSG code and the embedded WKT is outside "
-            "the closed-form families")
-    tr = Transformer.from_crs(src_srid, 4326, always_xy=True)
-    out = []
-    for i in range(0, len(coords), 2):
-        lon, lat = tr.transform(coords[i], coords[i + 1])
-        out += [lon, lat]
-    return out
+_WKT_KERNELS: dict[str, object] = {}
 
 
 def should_reproject(src_srid: int | None, dst_srid: int = 4326) -> bool:
     """Constant-folded per layer (ref ingest/processing.py:36-61)."""
     return src_srid is not None and src_srid != dst_srid
-
-
-def _rewrite_coords(buf: bytes, new_coords: list[float]) -> bytes:
-    """Rewrite every coordinate pair of a WKB blob in place (the
-    structure — types, ring counts — is unchanged by reprojection)."""
-    out = bytearray(buf)
-    it = iter(range(0, len(new_coords), 2))
-
-    def walk(off: int) -> int:
-        gtype = struct.unpack_from("<I", out, off + 1)[0] % 1000
-        off += 5
-        if gtype == POINT:
-            i = next(it)
-            struct.pack_into("<dd", out, off, new_coords[i], new_coords[i + 1])
-            return off + 16
-        if gtype == LINESTRING:
-            n = struct.unpack_from("<I", out, off)[0]
-            off += 4
-            for _ in range(n):
-                i = next(it)
-                struct.pack_into("<dd", out, off,
-                                 new_coords[i], new_coords[i + 1])
-                off += 16
-            return off
-        if gtype == POLYGON:
-            nr = struct.unpack_from("<I", out, off)[0]
-            off += 4
-            for _ in range(nr):
-                n = struct.unpack_from("<I", out, off)[0]
-                off += 4
-                for _ in range(n):
-                    i = next(it)
-                    struct.pack_into("<dd", out, off,
-                                     new_coords[i], new_coords[i + 1])
-                    off += 16
-            return off
-        # Multi*
-        ng = struct.unpack_from("<I", out, off)[0]
-        off += 4
-        for _ in range(ng):
-            off = walk(off)
-        return off
-
-    walk(0)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1204,11 +1093,11 @@ def _rewrite_runs(buf: bytes, runs, arr) -> bytes:
 
 
 def _reproject_array(arr, src_srid: int, crs_wkt: str | None):
-    """(N, 2) projected -> (N, 2) lon/lat, vectorized where the CRS
-    family allows (spherical Mercator, TM/UTM via
-    ``crs.to_lonlat_np``); identical fallback ladder to the scalar
-    ``_reproject_coords`` (table CRS -> embedded WKT -> pyproj gate)
-    so the drop/audit semantics are unchanged."""
+    """(N, 2) projected -> (N, 2) lon/lat in one array-kernel call:
+    spherical Mercator inline, else the table CRS kernel
+    (``crs.to_lonlat``), else the embedded-WKT kernel, else the
+    pyproj gate — unresolvable CRSs raise ``NotImplementedError``,
+    which normalize turns into drop+audit."""
     import numpy as np
     if src_srid == 4326:
         return arr
@@ -1218,34 +1107,17 @@ def _reproject_array(arr, src_srid: int, crs_wkt: str | None):
                          - np.pi / 2.0)
         return np.column_stack([lon, lat])
     from geohub_data_pipeline_spark.operators import crs as _crs
-    if src_srid > 0:
-        inv_np = _crs.to_lonlat_np(src_srid)
-        if inv_np is not None:             # vectorized TM families
-            lon, lat = inv_np(arr[:, 0], arr[:, 1])
-            return np.column_stack([lon, lat])
-        native = _crs.to_lonlat(src_srid)
-        if native is not None:             # other closed forms: scalar
-            out = np.empty_like(arr)
-            for i in range(arr.shape[0]):
-                out[i] = native(float(arr[i, 0]), float(arr[i, 1]))
-            return out
-    if crs_wkt:
-        if crs_wkt not in _WKT_INV_NP_CACHE:
+    inv = _crs.to_lonlat(src_srid) if src_srid > 0 else None
+    if inv is None and crs_wkt:
+        if crs_wkt not in _WKT_KERNELS:
             from geohub_data_pipeline_spark.operators import (
                 crs_wkt as _cw,
             )
-            _WKT_INV_NP_CACHE[crs_wkt] = _cw.to_lonlat_wkt(
-                crs_wkt, use_np=True)
-        inv_np = _WKT_INV_NP_CACHE[crs_wkt]
-        if inv_np is not None:             # array kernels (crs_np.py)
-            lon, lat = inv_np(arr[:, 0], arr[:, 1])
-            return np.column_stack([lon, lat])
-        inv = _wkt_inverse(crs_wkt)
-        if inv is not None:
-            out = np.empty_like(arr)
-            for i in range(arr.shape[0]):
-                out[i] = inv(float(arr[i, 0]), float(arr[i, 1]))
-            return out
+            _WKT_KERNELS[crs_wkt] = _cw.to_lonlat_wkt(crs_wkt)
+        inv = _WKT_KERNELS[crs_wkt]
+    if inv is not None:
+        lon, lat = inv(arr[:, 0], arr[:, 1])
+        return np.column_stack([lon, lat])
     try:  # remaining CRS: optional pyproj path (array-capable)
         from pyproj import Transformer  # noqa: PLC0415
     except ImportError as exc:

@@ -90,15 +90,12 @@ def _lonlat_bbox_projected(inv, x0, y0, x1, y1):
     corners plus edge midpoints and center.  Under grid convergence
     (UTM off the central meridian, Krovak, HOM...) the lon/lat
     extremes need not sit on the diagonal corners, so a two-corner
-    bound under-covers and drops tiles the block intersects."""
-    xs = (x0, (x0 + x1) / 2.0, x1)
-    ys = (y0, (y0 + y1) / 2.0, y1)
-    lons, lats = [], []
-    for sx in xs:
-        for sy in ys:
-            lo, la = inv(sx, sy)
-            lons.append(lo)
-            lats.append(la)
+    bound under-covers and drops tiles the block intersects.  The
+    nine samples go through the kernel in one call."""
+    xs = np.array([x0, (x0 + x1) / 2.0, x1], np.float64)
+    ys = np.array([y0, (y0 + y1) / 2.0, y1], np.float64)
+    lons, lats = inv(np.repeat(xs, 3), np.tile(ys, 3))
+    lons, lats = lons.tolist(), lats.tolist()
     return min(lons), min(lats), max(lons), max(lats)
 
 
@@ -130,21 +127,9 @@ def warp_tile_array(tbx: int, tby: int, z: int, srid: int,
         from geohub_data_pipeline_spark.operators import crs as C
         lon = np.degrees(X / _R)
         lat = np.degrees(2 * np.arctan(np.exp(Y / _R)) - np.pi / 2)
-        fwd_np = C.from_lonlat_np(srid)
-        if fwd_np is not None:    # numpy-covered families (crs_np.py)
-            lon2, lat2 = np.meshgrid(lon, lat)
-            sx, sy = fwd_np(lon2, lat2)
-            col2 = np.floor((sx - ox) / psx).astype(np.int64)
-            row2 = np.floor((oy - sy) / psy).astype(np.int64)
-        else:
-            fwd = C.from_lonlat(srid)
-            col2 = np.empty((BLOCK, BLOCK), np.int64)
-            row2 = np.empty((BLOCK, BLOCK), np.int64)
-            for i in range(BLOCK):
-                for j in range(BLOCK):
-                    sx, sy = fwd(float(lon[j]), float(lat[i]))
-                    col2[i, j] = math.floor((sx - ox) / psx)
-                    row2[i, j] = math.floor((oy - sy) / psy)
+        sx, sy = C.from_lonlat(srid)(*np.meshgrid(lon, lat))
+        col2 = np.floor((sx - ox) / psx).astype(np.int64)
+        row2 = np.floor((oy - sy) / psy).astype(np.int64)
 
     out = np.full((BLOCK, BLOCK), nodata, np.float64)
     for bx, by, bw, bh, pixels in blocks:

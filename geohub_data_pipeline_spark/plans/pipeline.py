@@ -921,6 +921,60 @@ ORDER BY doc_id
 """
 
 
+def _crs_roundtrip(spark: SparkSession, sf_dir: str, crs: list,
+                   lon_of: list, lat_of: list,
+                   labels: list | None = None) -> DataFrame:
+    """Forward+inverse round trip of ``documents`` rows, the shared
+    body of the CRS round-trip gate queries.  Row ``doc_id`` takes
+    CRS ``k = doc_id % len(crs)`` — an EPSG code, or a WKT/PROJJSON
+    text reported by ``labels[k]`` — at ``lon_of[k](doc_id)``,
+    ``lat_of[k](doc_id)``, and yields ``(doc_id, srid | family,
+    lon_rt, lat_rt)`` rounded to 4 decimals.
+
+    Scale: an Arrow-batched kernel — a scan, no shuffle.  Each batch
+    groups its rows by CRS and makes one array call per CRS and
+    direction; the transform pairs build once per batch iterator.
+    """
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    from geohub_data_pipeline_spark.operators import crs as C
+    from geohub_data_pipeline_spark.operators import crs_wkt as CW
+    from geohub_data_pipeline_spark.session import ship_package
+
+    ship_package(spark)
+    base = load_tables(spark, sf_dir).documents.select("doc_id")
+    key_col = "srid" if labels is None else "family"
+    keys = np.asarray(crs if labels is None else labels)
+
+    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pairs = [CW.pair_from_wkt(c) if isinstance(c, str)
+                 else (C.from_lonlat(c), C.to_lonlat(c)) for c in crs]
+        for pdf in it:
+            did = pdf["doc_id"].to_numpy(np.int64)
+            k = did % len(crs)
+            lon2 = np.empty(len(did))
+            lat2 = np.empty(len(did))
+            for j, (fwd, inv) in enumerate(pairs):
+                m = k == j
+                if m.any():
+                    d = did[m]
+                    lon2[m], lat2[m] = inv(*fwd(lon_of[j](d), lat_of[j](d)))
+            # + 0.0 canonicalizes -0.0 (a -1e-9 residual rounds to
+            # negative zero, which hash-compares unequal to 0.0)
+            yield pd.DataFrame({
+                "doc_id": did, key_col: keys[k],
+                "lon_rt": [round(v, 4) + 0.0 for v in lon2.tolist()],
+                "lat_rt": [round(v, 4) + 0.0 for v in lat2.tolist()]})
+
+    return base.mapInPandas(
+        rt, f"doc_id long, {key_col} "
+            f"{'int' if labels is None else 'string'}, "
+            "lon_rt double, lat_rt double")
+
+
 @query("crs_roundtrip", "pipeline",
        "§2.2 T7 reprojection: forward+inverse through the closed-form "
        "CRS table (TM/LCC/LAEA/Albers + OSGB Helmert datum path; "
@@ -936,40 +990,10 @@ def crs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless per-row math in an Arrow-batched kernel — a scan,
     no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select(
-        "doc_id",
-        (-1.0 + (F.col("doc_id") % 80).cast("double") * 0.1).alias("lon"),
-        (42.0 + ((F.col("doc_id") * 3) % 80).cast("double") * 0.1)
-        .alias("lat"),
-    )
-    srids = [27700, 5070, 2154, 3035]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s)) for s in srids}
-        for pdf in it:
-            rows = []
-            for did, lon, lat in zip(pdf["doc_id"], pdf["lon"], pdf["lat"]):
-                srid = srids[int(did) % 4]
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(float(lon), float(lat)))
-                # + 0.0 canonicalizes -0.0 (a -1e-9 residual rounds to
-                # negative zero, which hash-compares unequal to 0.0)
-                rows.append((int(did), srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(
+        spark, sf_dir, [27700, 5070, 2154, 3035],
+        [lambda d: -1.0 + (d % 80) * 0.1] * 4,
+        [lambda d: 42.0 + ((d * 3) % 80) * 0.1] * 4)
 
 
 _CRS_EA_SQL = """
@@ -1001,36 +1025,10 @@ def crs_roundtrip_equalarea(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
-    srids = [6933, 3410, 54034, 54009]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s)) for s in srids}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                srid = srids[did % 4]
-                lon = -170.0 + (did % 340)
-                lat = -80.0 + ((did * 7) % 160)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(
+        spark, sf_dir, [6933, 3410, 54034, 54009],
+        [lambda d: -170.0 + (d % 340)] * 4,
+        [lambda d: -80.0 + ((d * 7) % 160)] * 4)
 
 
 # ---------------------------------------------------------------------------
@@ -1484,16 +1482,6 @@ def crs_roundtrip_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
     srids = [29902, 3413, 3031, 5514, 26985, 3577]
     lon_of = [
         lambda d: -8.0 + (d % 30) * 0.05,
@@ -1511,25 +1499,7 @@ def crs_roundtrip_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: 38.0 + ((d * 3) % 20) * 0.1,
         lambda d: -43.0 + ((d * 3) % 33) * 1.0,
     ]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s)) for s in srids}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % 6
-                srid = srids[k]
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, srids, lon_of, lat_of)
 
 
 # ---------------------------------------------------------------------------
@@ -1602,16 +1572,6 @@ def crs_roundtrip_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
     lon_of = [
         lambda d: 3.5 + (d % 30) * 0.1,
         lambda d: 6.0 + (d % 35) * 0.1,
@@ -1642,26 +1602,7 @@ def crs_roundtrip_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: 33.0 + ((d * 3) % 30) * 0.1,
         lambda d: 29.0 + ((d * 3) % 30) * 0.1,
     ]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s))
-                 for s in _CRS_CODES}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % 13
-                srid = _CRS_CODES[k]
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _CRS_CODES, lon_of, lat_of)
 
 
 # ---------------------------------------------------------------------------
@@ -1744,38 +1685,9 @@ def crs_roundtrip_codes_r9(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
     lon_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R9_LON]  # noqa: S307
     lat_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R9_LAT]  # noqa: S307
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s))
-                 for s in _CRS_CODES_R9}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % 13
-                srid = _CRS_CODES_R9[k]
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _CRS_CODES_R9, lon_of, lat_of)
 
 
 # ---------------------------------------------------------------------------
@@ -2069,16 +1981,6 @@ def crs_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no shuffle; the five transform pairs are built once per
     executor batch iterator and cached.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs_wkt as CW
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
     lon_of = [
         lambda d: 9.0 + (d % 60) * 0.2,
         lambda d: -75.0 + (d % 30) * 0.1,
@@ -2095,24 +1997,8 @@ def crs_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: 50.8 + ((d * 3) % 27) * 0.1,
         lambda d: 42.0 + ((d * 3) % 55) * 0.1,
     ]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = [CW.pair_from_wkt(w) for w in _WKT_BANK]
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % 6
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[k]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, _WKT_FAMILY[k],
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "family", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, family string, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _WKT_BANK, lon_of, lat_of,
+                          _WKT_FAMILY)
 
 
 # ---------------------------------------------------------------------------
@@ -5990,16 +5876,6 @@ def crs_wkt2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no shuffle; the four transform pairs build once per batch
     iterator.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs_wkt as CW
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
     lon_of = [
         lambda d: 9.0 + (d % 60) * 0.2,
         lambda d: -4.0 + (d % 80) * 0.1,
@@ -6012,25 +5888,8 @@ def crs_wkt2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda d: 30.0 + ((d * 3) % 80) * 0.5,
         lambda d: 50.0 + ((d * 3) % 90) * 0.1,
     ]
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = [CW.pair_from_wkt(w) for w in _WKT2_BANK]
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % 4
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[k]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, _WKT2_FAMILY[k],
-                             round(lon2, 4) + 0.0,
-                             round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "family", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, family string, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _WKT2_BANK, lon_of, lat_of,
+                          _WKT2_FAMILY)
 
 
 # ---------------------------------------------------------------------------
@@ -6589,39 +6448,9 @@ def crs_roundtrip_codes_r9b(spark: SparkSession,
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
-    n = len(_CRS_CODES_R9B)
     lon_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R9B_LON]  # noqa: S307
     lat_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R9B_LAT]  # noqa: S307
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s))
-                 for s in _CRS_CODES_R9B}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % n
-                srid = _CRS_CODES_R9B[k]
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _CRS_CODES_R9B, lon_of, lat_of)
 
 
 # ---------------------------------------------------------------------------
@@ -6703,39 +6532,9 @@ def crs_roundtrip_codes_r10(spark: SparkSession,
     Scale: stateless per-row math in an Arrow-batched kernel — a
     scan, no shuffle.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from geohub_data_pipeline_spark.operators import crs as C
-    from geohub_data_pipeline_spark.session import ship_package
-
-    ship_package(spark)
-    t = load_tables(spark, sf_dir)
-    base = t.documents.select("doc_id")
-    n = len(_CRS_CODES_R10)
     lon_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R10_LON]  # noqa: S307
     lat_of = [eval(f"lambda doc_id: {e}") for e in _CRS_R10_LAT]  # noqa: S307
-
-    def rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pairs = {s: (C.from_lonlat(s), C.to_lonlat(s))
-                 for s in _CRS_CODES_R10}
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = did % n
-                srid = _CRS_CODES_R10[k]
-                lon, lat = lon_of[k](did), lat_of[k](did)
-                fwd, inv = pairs[srid]
-                lon2, lat2 = inv(*fwd(lon, lat))
-                rows.append((did, srid,
-                             round(lon2, 4) + 0.0, round(lat2, 4) + 0.0))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "srid", "lon_rt", "lat_rt"])
-
-    return base.mapInPandas(
-        rt, "doc_id long, srid int, lon_rt double, lat_rt double")
+    return _crs_roundtrip(spark, sf_dir, _CRS_CODES_R10, lon_of, lat_of)
 
 
 def _coverage_probe_codes() -> list[int]:

@@ -48,6 +48,7 @@ def vector_features(spark: SparkSession, n_per_layer: int = 40) -> DataFrame:
     NULL-srid layer."""
     from geohub_data_pipeline_spark.operators import crs as C
 
+    utm33 = C.from_lonlat(32633)
     rows = []
     fid = 0
     layers = [
@@ -67,7 +68,7 @@ def vector_features(spark: SparkSession, n_per_layer: int = 40) -> DataFrame:
                 # genuine zone-33 coordinates (lon 12..18, lat 0..72)
                 lon = 12.0 + (i * 0.73) % 6.0
                 lat = (i * 4.1) % 72.0
-                x, y = C.lonlat_to_utm(lon, lat, 33)
+                x, y = utm33(lon, lat)
             else:
                 x, y = lon, lat
             if fid % 97 == 0:                      # ~1% NULL geometry

@@ -23,7 +23,7 @@ from geohub_data_pipeline_spark.operators import crs as C
 
 def test_utm_zone_origin_exact():
     # central meridian x equator = (FE, 0) by definition
-    e, n = C.lonlat_to_utm(15.0, 0.0, 33)
+    e, n = C.from_lonlat(32633)(15.0, 0.0)
     assert math.isclose(e, 500000.0, abs_tol=1e-6)
     assert math.isclose(n, 0.0, abs_tol=1e-6)
 
@@ -31,7 +31,7 @@ def test_utm_zone_origin_exact():
 def test_utm_central_meridian_scale_and_arc():
     # northing on the CM = k0 * meridian arc; arc(45N, WGS84) is the
     # published 4984944.378 m
-    e, n = C.lonlat_to_utm(15.0, 45.0, 33)
+    e, n = C.from_lonlat(32633)(15.0, 45.0)
     assert math.isclose(e, 500000.0, abs_tol=1e-6)
     assert math.isclose(n, 0.9996 * 4984944.378, abs_tol=0.01)
 
@@ -41,21 +41,21 @@ def test_utm_roundtrip_grid():
         lon0 = zone * 6.0 - 183.0
         for dlon in (-2.9, 0.0, 2.9):
             for lat in (-79.0, -30.0, 0.0, 30.0, 71.9):
-                north = lat >= 0
-                e, n = C.lonlat_to_utm(lon0 + dlon, lat, zone, north=north)
-                lon2, lat2 = C.utm_to_lonlat(e, n, zone, north=north)
+                srid = (32600 if lat >= 0 else 32700) + zone
+                e, n = C.from_lonlat(srid)(lon0 + dlon, lat)
+                lon2, lat2 = C.to_lonlat(srid)(e, n)
                 assert math.isclose(lon0 + dlon, lon2, abs_tol=1e-9)
                 assert math.isclose(lat, lat2, abs_tol=1e-9)
 
 
 def test_utm_south_false_northing():
-    e, n = C.lonlat_to_utm(15.0, -0.001, 33, north=False)
+    e, n = C.from_lonlat(32733)(15.0, -0.001)
     assert n < 10000000.0 and n > 9999000.0     # just under FN_south
 
 
 def test_utm_hemisphere_symmetry():
-    eN, nN = C.lonlat_to_utm(16.0, 40.0, 33, north=True)
-    eS, nS = C.lonlat_to_utm(16.0, -40.0, 33, north=False)
+    eN, nN = C.from_lonlat(32633)(16.0, 40.0)
+    eS, nS = C.from_lonlat(32733)(16.0, -40.0)
     assert math.isclose(eN, eS, abs_tol=1e-6)
     assert math.isclose(nN, 10000000.0 - nS, abs_tol=1e-6)
 
@@ -65,22 +65,22 @@ def test_utm_hemisphere_symmetry():
 # ---------------------------------------------------------------------------
 
 def test_laea_iogp_control_point():
-    e, n = C.lonlat_to_laea(5.0, 50.0)
+    e, n = C.from_lonlat(3035)(5.0, 50.0)
     assert math.isclose(e, 3962799.45, abs_tol=0.02)
     assert math.isclose(n, 2999718.85, abs_tol=0.02)
-    lon, lat = C.laea_to_lonlat(3962799.45, 2999718.85)
+    lon, lat = C.to_lonlat(3035)(3962799.45, 2999718.85)
     assert math.isclose(lon, 5.0, abs_tol=1e-7)
     assert math.isclose(lat, 50.0, abs_tol=1e-7)
 
 
 def test_laea_origin_and_roundtrip():
-    e, n = C.lonlat_to_laea(10.0, 52.0)
+    e, n = C.from_lonlat(3035)(10.0, 52.0)
     assert math.isclose(e, 4321000.0, abs_tol=1e-6)
     assert math.isclose(n, 3210000.0, abs_tol=1e-6)
     for lon, lat in [(-10.0, 35.0), (30.0, 70.0), (10.0, 52.0),
                      (25.0, 40.0)]:
-        e, n = C.lonlat_to_laea(lon, lat)
-        lon2, lat2 = C.laea_to_lonlat(e, n)
+        e, n = C.from_lonlat(3035)(lon, lat)
+        lon2, lat2 = C.to_lonlat(3035)(e, n)
         assert math.isclose(lon, lon2, abs_tol=1e-8)
         assert math.isclose(lat, lat2, abs_tol=1e-8)
 
@@ -90,7 +90,7 @@ def test_laea_origin_and_roundtrip():
 # ---------------------------------------------------------------------------
 
 def test_lcc_origin_exact():
-    e, n = C.lonlat_to_lcc(3.0, 46.5)
+    e, n = C.from_lonlat(2154)(3.0, 46.5)
     assert math.isclose(e, 700000.0, abs_tol=1e-6)
     assert math.isclose(n, 6600000.0, abs_tol=1e-6)
 
@@ -104,8 +104,8 @@ def test_lcc_standard_parallels_true_scale():
         phi = math.radians(sp)
         nu = a / math.sqrt(1 - e2 * math.sin(phi) ** 2)
         expect = nu * math.cos(phi) * math.radians(0.1)
-        e1, n1 = C.lonlat_to_lcc(3.0, sp)
-        e2_, n2 = C.lonlat_to_lcc(3.1, sp)
+        e1, n1 = C.from_lonlat(2154)(3.0, sp)
+        e2_, n2 = C.from_lonlat(2154)(3.1, sp)
         got = math.hypot(e2_ - e1, n2 - n1)
         assert got == pytest.approx(expect, rel=2e-6)
 
@@ -113,8 +113,8 @@ def test_lcc_standard_parallels_true_scale():
 def test_lcc_roundtrip():
     for lon, lat in [(-4.5, 48.4), (7.7, 43.7), (3.0, 46.5),
                      (2.35, 48.86), (9.4, 41.9)]:
-        e, n = C.lonlat_to_lcc(lon, lat)
-        lon2, lat2 = C.lcc_to_lonlat(e, n)
+        e, n = C.from_lonlat(2154)(lon, lat)
+        lon2, lat2 = C.to_lonlat(2154)(e, n)
         assert math.isclose(lon, lon2, abs_tol=1e-9)
         assert math.isclose(lat, lat2, abs_tol=1e-9)
 
@@ -139,9 +139,9 @@ def test_epsg_dispatch_coverage():
     lon, lat = inv(*fwd(9.0, 51.0))
     assert math.isclose(lon, 9.0, abs_tol=1e-9)
     assert math.isclose(lat, 51.0, abs_tol=1e-9)
-    # the table 3035/2154 path is byte-identical to the named instances
-    assert C._pair(3035)[0](10.5, 51.2) == C.lonlat_to_laea(10.5, 51.2)
-    assert C._pair(2154)[0](3.5, 47.0) == C.lonlat_to_lcc(3.5, 47.0)
+    # one cached kernel pair per srid serves both directions
+    assert C._pair(3035) == (C.from_lonlat(3035), C.to_lonlat(3035))
+    assert C._pair(32633) == (C.from_lonlat(32633), C.to_lonlat(32633))
 
 
 # ---------------------------------------------------------------------------
@@ -500,3 +500,21 @@ def test_cea_moll_from_wkt():
     xm, ym = fwd_m(33.3, 12.5)
     xt, yt = C.from_lonlat(54009)(33.3, 12.5)
     assert abs(xm - xt) < 1e-6 and abs(ym - yt) < 1e-6
+
+
+def test_every_srid_returns_scalars_on_float_input():
+    """Both kernels of every supported srid take python floats and give
+    float / numpy float64 scalars back (never 0-d arrays), near each
+    CRS's own origin."""
+    import numpy as np
+
+    for srid in C.supported_srids():
+        p = C._CRS_TABLE[srid][2]
+        lon = p.get("lon0", p.get("lon_c", 0.0)) + 0.5
+        lat = p.get("lat0", p.get("lat_c", p.get("lat_ts", 0.0)))
+        lat = max(-80.0, min(80.0, lat)) + 0.5
+        x, y = C.from_lonlat(srid)(lon, lat)
+        lon2, lat2 = C.to_lonlat(srid)(float(x), float(y))
+        for v in (x, y, lon2, lat2):
+            assert type(v) in (float, np.float64), (srid, type(v))
+            assert math.isfinite(v), srid

@@ -357,21 +357,20 @@ def test_spcs83_ftus_twins_exact_unit():
         _rt(f_code, lon, lat, tol=1e-8)
 
 
-def test_spcs83_numpy_twins_match_scalar():
-    """The vectorized table path (crs_np.pair_np) agrees with the
-    scalar closures for the new metric AND ftUS zones."""
+def test_spcs83_kernels_roundtrip():
+    """The table kernels round-trip the new metric AND ftUS zones as
+    one-element arrays, and agree with the same kernels on floats."""
     import numpy as np
 
-    from geohub_data_pipeline_spark.operators import crs_np
     for srid, lon, lat in ((26943, -121.9, 37.4),
                            (2229, -118.24, 34.05),
                            (2277, -97.74, 30.27),
                            (32118, -73.99, 40.75)):
-        fwd_np, inv_np = crs_np.pair_np(srid)
-        xs, ys = fwd_np(np.array([lon]), np.array([lat]))
-        x, y = C.from_lonlat(srid)(lon, lat)
+        fwd, inv = C.from_lonlat(srid), C.to_lonlat(srid)
+        xs, ys = fwd(np.array([lon]), np.array([lat]))
+        x, y = fwd(lon, lat)
         assert abs(xs[0] - x) < 1e-6 and abs(ys[0] - y) < 1e-6
-        los, las = inv_np(xs, ys)
+        los, las = inv(xs, ys)
         assert abs(los[0] - lon) < 1e-9 and abs(las[0] - lat) < 1e-9
 
 
@@ -518,10 +517,9 @@ def test_luxembourg_luref_roundtrip_and_city():
     _rt(2169, 6.1, 49.8)
 
 
-def test_round9_codes_dispatch_supported_and_np_twins():
+def test_round9_codes_dispatch_supported_and_roundtrip():
     import numpy as np
 
-    from geohub_data_pipeline_spark.operators import crs_np
     new = (list(range(2443, 2462)) + list(range(6669, 6688))
            + list(range(3006, 3019)) + [3067, 3763, 2169]
            + list(range(5105, 5131)) + list(range(7846, 7860))
@@ -531,15 +529,15 @@ def test_round9_codes_dispatch_supported_and_np_twins():
         assert srid in sup
         assert C.to_lonlat(srid) is not None
         assert C.from_lonlat(srid) is not None
-    # numpy twins agree with the scalar closures (incl. datum-shifted)
+    # array and float calls agree and round-trip (incl. datum-shifted)
     for srid, lon, lat in ((6677, 139.9, 35.7), (3006, 18.07, 59.33),
                            (31983, -46.63, -23.55), (31256, 16.37, 48.21),
                            (2169, 6.13, 49.61)):
-        fwd_np, inv_np = crs_np.pair_np(srid)
-        xs, ys = fwd_np(np.array([lon]), np.array([lat]))
-        x, y = C.from_lonlat(srid)(lon, lat)
+        fwd, inv = C.from_lonlat(srid), C.to_lonlat(srid)
+        xs, ys = fwd(np.array([lon]), np.array([lat]))
+        x, y = fwd(lon, lat)
         assert abs(xs[0] - x) < 1e-6 and abs(ys[0] - y) < 1e-6
-        los, las = inv_np(xs, ys)
+        los, las = inv(xs, ys)
         assert abs(los[0] - lon) < 1e-7 and abs(las[0] - lat) < 1e-7
 
 

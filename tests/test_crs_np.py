@@ -1,12 +1,13 @@
-"""Numpy CRS twins (operators/crs_np.py) vs the scalar reference
-implementations — every covered table srid sweeps a grid of points
-through both paths in both directions."""
+"""Array CRS kernels (operators/crs.py): ONE kernel pair per family
+serves both numpy arrays and python floats.  Every covered table srid
+sweeps a grid of points in both directions: the batch round-trips to
+its input, and the same kernel called point by point on floats (the
+scalar call) agrees with the batch call."""
 
 import numpy as np
 import pytest
 
 from geohub_data_pipeline_spark.operators import crs as C
-from geohub_data_pipeline_spark.operators import crs_np as CN
 
 # srid -> a plausible lon/lat window (lon0, lon1, lat0, lat1)
 _WINDOWS = {
@@ -51,55 +52,53 @@ def _grid(w, n=9):
     return LO.ravel(), LA.ravel()
 
 
-@pytest.mark.parametrize("srid", sorted(_WINDOWS))
-def test_np_matches_scalar_both_directions(srid):
-    pair = CN.pair_np(srid)
-    assert pair is not None, f"no numpy twin for {srid}"
-    fwd_np, inv_np = pair
-    fwd_s, inv_s = C.from_lonlat(srid), C.to_lonlat(srid)
-
-    lon, lat = _grid(_WINDOWS[srid])
-    X, Y = fwd_np(lon, lat)
-    # forward: numpy vs scalar
-    for i in range(0, len(lon), 7):
-        xs, ys = fwd_s(float(lon[i]), float(lat[i]))
-        assert abs(X[i] - xs) < 1e-5 and abs(Y[i] - ys) < 1e-5, \
-            (srid, lon[i], lat[i], X[i], xs)
-    # inverse: numpy round-trip against the INPUT (stronger than
-    # matching the scalar inverse)
-    LO, LA = inv_np(X, Y)
+def _check_pair(fwd, inv, w, label, n=9, fwd_step=7, inv_step=11):
+    """Batch round trip within 5e-7 deg; float calls match the batch."""
+    lon, lat = _grid(w, n)
+    X, Y = fwd(lon, lat)
+    LO, LA = inv(X, Y)
     dlon = np.abs(LO - lon)
     dlon = np.minimum(dlon, 360.0 - dlon)   # +-180 are one meridian
-    # 5e-7 deg (~5 cm): the Helmert codes' ECEF iteration tolerance,
-    # identical to the scalar path's round-trip error class
-    assert np.max(dlon) < 5e-7
-    assert np.max(np.abs(LA - lat)) < 5e-7
-    # inverse: numpy vs scalar on a sample
-    for i in range(0, len(lon), 11):
-        lo_s, la_s = inv_s(float(X[i]), float(Y[i]))
+    # 5e-7 deg (~5 cm): the Helmert codes' ECEF iteration tolerance
+    assert np.max(dlon) < 5e-7, label
+    assert np.max(np.abs(LA - lat)) < 5e-7, label
+    for i in range(0, len(lon), fwd_step):
+        xs, ys = fwd(float(lon[i]), float(lat[i]))
+        assert abs(X[i] - xs) < 1e-5 and abs(Y[i] - ys) < 1e-5, \
+            (label, lon[i], lat[i], X[i], xs)
+    for i in range(0, len(lon), inv_step):
+        lo_s, la_s = inv(float(X[i]), float(Y[i]))
         d = abs(LO[i] - lo_s)
-        assert min(d, 360.0 - d) < 1e-9 and abs(LA[i] - la_s) < 1e-9
+        assert min(d, 360.0 - d) < 1e-9 and abs(LA[i] - la_s) < 1e-9, \
+            (label, X[i], Y[i])
+
+
+@pytest.mark.parametrize("srid", sorted(_WINDOWS))
+def test_np_matches_scalar_both_directions(srid):
+    _check_pair(C.from_lonlat(srid), C.to_lonlat(srid), _WINDOWS[srid],
+                srid)
 
 
 def test_dispatch_returns_np_kernels():
-    """to_lonlat_np / from_lonlat_np now cover every numpy family,
-    including Helmert grids — the normalize and warp fast paths."""
+    """to_lonlat / from_lonlat return array kernels for every table
+    family, including Helmert grids — the normalize and warp paths."""
+    lon = np.array([5.0, 6.0, 7.0])
+    lat = np.array([50.0, 51.0, 52.0])
     for srid in (2154, 28992, 27700, 3035, 6931, 3413, 5070, 6933,
-                 31467, 23031):
-        assert C.to_lonlat_np(srid) is not None, srid
-        assert C.from_lonlat_np(srid) is not None, srid
-    # every table family now has a twin
-    for srid in (5514, 2056, 54009):
-        assert C.to_lonlat_np(srid) is not None, srid
+                 31467, 23031, 5514, 2056, 54009, 32633):
+        x, y = C.from_lonlat(srid)(lon, lat)
+        lo, la = C.to_lonlat(srid)(x, y)
+        assert x.shape == y.shape == lo.shape == la.shape == (3,), srid
 
 
 def test_np_scalar_parity_scalar_inputs():
-    """The np kernels accept python floats too (warp calls them with
-    scalars at tile corners)."""
-    fwd, inv = CN.pair_np(2154)
+    """The kernels accept python floats too and give scalars back."""
+    fwd, inv = C.from_lonlat(2154), C.to_lonlat(2154)
     x, y = fwd(2.35, 48.85)
     lo, la = inv(float(x), float(y))
     assert abs(lo - 2.35) < 1e-9 and abs(la - 48.85) < 1e-9
+    X, Y = fwd(np.array([2.35]), np.array([48.85]))
+    assert X[0] == x and Y[0] == y
 
 
 _MODIS_SINU = """PROJCS["MODIS Sinusoidal",
@@ -112,10 +111,10 @@ _MODIS_SINU = """PROJCS["MODIS Sinusoidal",
 
 
 def test_wkt_np_kernels_match_scalar():
-    """pair_from_wkt(use_np=True) builds array kernels from the same
-    parsed parameters — parity vs the scalar closures across the
-    fixture bank (ftUS units, TOWGS84 Helmert, Ferro meridian,
-    aux-sphere Mercator, MODIS sinusoidal)."""
+    """pair_from_wkt builds array kernels from the parsed parameters —
+    round trip and float-call parity across the fixture bank (ftUS
+    units, TOWGS84 Helmert, Ferro meridian, aux-sphere Mercator, MODIS
+    sinusoidal)."""
     from tests.test_crs_wkt import (
         _WKT_2263_FTUS,
         _WKT_27700,
@@ -134,35 +133,22 @@ def test_wkt_np_kernels_match_scalar():
         _MODIS_SINU: (-170.0, 170.0, -80.0, 80.0),
     }
     for wkt, w in cases.items():
-        scal = CW.pair_from_wkt(wkt)
-        vec = CW.pair_from_wkt(wkt, use_np=True)
-        assert scal is not None and vec is not None, wkt[:40]
-        lon, lat = _grid(w, n=7)
-        X, Y = vec[0](lon, lat)
-        for i in range(0, len(lon), 5):
-            xs, ys = scal[0](float(lon[i]), float(lat[i]))
-            assert abs(X[i] - xs) < 1e-5 and abs(Y[i] - ys) < 1e-5, \
-                (wkt[:40], lon[i], lat[i])
-        LO, LA = vec[1](X, Y)
-        for i in range(0, len(lon), 5):
-            lo_s, la_s = scal[1](float(X[i]), float(Y[i]))
-            assert abs(LO[i] - lo_s) < 1e-9
-            assert abs(LA[i] - la_s) < 1e-9
+        pair = CW.pair_from_wkt(wkt)
+        assert pair is not None, wkt[:40]
+        _check_pair(*pair, w, wkt[:40], n=7, fwd_step=5, inv_step=5)
 
 
 def test_reproject_array_uses_np_wkt_path():
-    """normalize's array reprojector takes the vectorized WKT route
+    """normalize's array reprojector takes the WKT kernel route
     for srid-0 + embedded-WKT features (e.g. MODIS sinusoidal or an
     AUTHORITY-less .prj)."""
+    from geohub_data_pipeline_spark.operators import crs_wkt as CW
     from geohub_data_pipeline_spark.operators import geometry as G
 
-    fwd = __import__(
-        "geohub_data_pipeline_spark.operators.crs_wkt",
-        fromlist=["x"]).from_lonlat_wkt(_MODIS_SINU)
+    fwd = CW.from_lonlat_wkt(_MODIS_SINU)
     lon = np.linspace(-150, 150, 400)
     lat = np.linspace(-70, 70, 400)
-    arr = np.column_stack([[fwd(lo, la)[0] for lo, la in zip(lon, lat)],
-                           [fwd(lo, la)[1] for lo, la in zip(lon, lat)]])
+    arr = np.column_stack(fwd(lon, lat))
     out = G._reproject_array(arr, 0, _MODIS_SINU)
     assert np.max(np.abs(out[:, 0] - lon)) < 1e-7
     assert np.max(np.abs(out[:, 1] - lat)) < 1e-7

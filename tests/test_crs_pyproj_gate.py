@@ -1,6 +1,6 @@
 """The pyproj FALLBACK leg of the CRS engine (r10 verdict next #8).
 
-``_reproject_coords`` / ``_reproject_array`` route any EPSG code
+``geometry._reproject_array`` routes any EPSG code
 outside the closed-form families (``crs.DECLARED_SRID_RANGES``) to
 pyproj when it is installed, and raise NotImplementedError (which
 ``normalize_features`` turns into drop+audit) when it is not.  This
@@ -10,6 +10,7 @@ skipped-with-reason here, while the absent-path contract (loud raise,
 drop-audited) is pinned unconditionally.
 """
 
+import numpy as np
 import pytest
 
 from geohub_data_pipeline_spark.operators import geometry as G
@@ -60,14 +61,10 @@ def test_pyproj_fallback_roundtrips_out_of_boundary_srids():
         lon, lat = 12.0, 47.0          # generic mid-latitude probe
         fwd = Transformer.from_crs(4326, srid, always_xy=True)
         x, y = fwd.transform(lon, lat)
-        got = G._reproject_coords([x, y], srid)
+        arr = np.array([[x, y]], dtype=float)
+        got = G._reproject_array(arr, srid, None)[0]
         assert got[0] == pytest.approx(lon, abs=1e-6)
         assert got[1] == pytest.approx(lat, abs=1e-6)
-        import numpy as np
-        arr = np.array([[x, y]], dtype=float)
-        got2 = G._reproject_array(arr, srid, None)
-        assert got2[0, 0] == pytest.approx(lon, abs=1e-6)
-        assert got2[0, 1] == pytest.approx(lat, abs=1e-6)
 
 
 @pytest.mark.skipif(HAVE_PYPROJ, reason=(
@@ -77,11 +74,7 @@ def test_absent_pyproj_raises_loudly_for_unknown_srid():
     NotImplementedError naming the gate — normalize_features converts
     this into drop+audit (geometry.py drop-audit consumer), never a
     silently wrong coordinate."""
-    import numpy as np
-
     for srid in _OUT_OF_BOUNDARY[:3]:
-        with pytest.raises(NotImplementedError, match="pyproj"):
-            G._reproject_coords([600000.0, 200000.0], srid)
         with pytest.raises(NotImplementedError, match="pyproj"):
             G._reproject_array(
                 np.array([[600000.0, 200000.0]]), srid, None)

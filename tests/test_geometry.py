@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,7 +49,7 @@ def test_wkb_roundtrip_and_promote():
 def test_mercator_roundtrip():
     for lon, lat in [(0.0, 0.0), (10.0, 45.0), (-120.0, -33.0)]:
         x, y = G.lonlat_to_mercator(lon, lat)
-        lon2, lat2 = G.mercator_to_lonlat(x, y)
+        lon2, lat2 = G._reproject_array(np.array([[x, y]]), 3857, None)[0]
         assert math.isclose(lon, lon2, abs_tol=1e-9)
         assert math.isclose(lat, lat2, abs_tol=1e-9)
 
@@ -359,4 +360,5 @@ def test_unsupported_crs_raises_without_pyproj():
     except ImportError:
         pass
     with pytest.raises(NotImplementedError):
-        G._reproject_coords([1.0, 2.0], 29101)  # Brazil Polyconic: no table entry
+        # Brazil Polyconic: no table entry
+        G._reproject_array(np.array([[1.0, 2.0]]), 29101, None)
