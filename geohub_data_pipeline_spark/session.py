@@ -12,15 +12,43 @@ Scale notes (targets a 1000-executor cluster; tested on local[32]):
     AQE coalesces down.  At cluster scale raise it to ~2-3x total cores.
   - Arrow enabled: every pandas-UDF operator (geometry, raster, media)
     moves data in Arrow batches, not pickled rows.
+
+Python workers (``_worker_confs``, local masters only):
+  - ``spark.executorEnv.PYTHONPATH`` puts the directory holding this
+    package on the path of every Python process Spark starts: task
+    workers, their daemon, and the streaming data-source runner, which
+    is not a task and never receives ``addPyFile`` (without it the
+    ingest queue source fails with ``ModuleNotFoundError``).  In a
+    cluster the image or the archives conf does this job;
+    ``ship_package`` stays for the task path.
+  - ``spark.python.daemon.module`` names ``daemon.py``, Spark's daemon
+    minus the per-task re-read of every zip archive on the worker's
+    path (a 1-partition Python map 0.21-0.24 -> 0.10-0.11 s on 4
+    cores).  It is set only when the driver resolves the module with
+    ``find_spec`` (no job runs); otherwise Spark's daemon is kept and
+    the decision is logged, since a daemon module that cannot be
+    imported fails every Python task.
+  - Both are static (read when the JVM starts), so a harness-provided
+    session runs with Spark's default daemon; ``configure`` cannot
+    change them.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import importlib.util
+import logging
 import os
+import pathlib
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+DAEMON_MODULE = "geohub_data_pipeline_spark.daemon"
 
 _PKG_ZIP: str | None = None
 
@@ -33,6 +61,7 @@ def _package_zip() -> str:
         fd, path = tempfile.mkstemp(prefix="geohub_data_pipeline_spark-",
                                     suffix=".zip")
         os.close(fd)
+        atexit.register(pathlib.Path(path).unlink, missing_ok=True)
         with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for name in files:
@@ -128,14 +157,30 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@functools.cache
+def _worker_confs() -> dict[str, str]:
+    """Static confs for local-mode Python workers (module docstring);
+    the daemon decision is made and logged once a process."""
+    confs = {"spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))}
+    if importlib.util.find_spec(DAEMON_MODULE) is not None:
+        confs["spark.python.daemon.module"] = DAEMON_MODULE
+        _log.info("Python workers run daemon %s", DAEMON_MODULE)
+    else:
+        _log.warning("cannot resolve %s; Python workers keep Spark's "
+                     "default daemon", DAEMON_MODULE)
+    return confs
+
+
 def get_session(app_name: str = "geohub-data-pipeline-spark",
                 master: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-    )
-    for k, v in {**STATIC_CONFS, **RUNTIME_CONFS}.items():
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
+    confs = {**STATIC_CONFS, **RUNTIME_CONFS}
+    if master.startswith("local"):
+        confs.update(_worker_confs())
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return configure(builder.getOrCreate())

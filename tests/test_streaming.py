@@ -374,6 +374,63 @@ def test_service_drain_and_restart_exactly_once(service):
     assert service.ledger().count() == 2 * n1
 
 
+def test_drain_check_starts_no_empty_round(spark, tmp_path):
+    """X1 without the empty round: a query start that would read
+    nothing is decided on the driver from the spool listing, so a call
+    makes exactly as many starts as it has non-empty receives."""
+
+    def spied(name: str, n_msgs: int):
+        base = str(tmp_path / name)
+        svc = IngestService(spark=spark, messages_dir=f"{base}/msgs",
+                            ledger_dir=f"{base}/ledger",
+                            checkpoint_dir=f"{base}/ckpt", simulate=True)
+        _write_msgs(svc.messages_dir, "m0.json", [
+            {"msg_id": i, "body": f"{URL}/raw/{name}{i}.gpkg;t;"
+             "join_vector_tiles=false", "enqueued_ts": "2024-01-01"}
+            for i in range(n_msgs)])
+        starts = []
+        start_once = svc._start_once
+
+        def spy(src):
+            starts.append(src)
+            return start_once(src)
+        svc._start_once = spy
+        return svc, starts
+
+    def datasets(svc):
+        return {r.dataset.rsplit("/", 1)[-1] for r in svc.ledger()
+                .select("dataset").collect()}
+
+    empty, starts = spied("empty", 0)
+    empty.run_available_now()                   # nothing spooled yet
+    assert len(starts) == 1
+
+    one, starts = spied("one", 1)
+    one.run_available_now()
+    assert len(starts) == 1 and datasets(one) == {"one0.gpkg"}
+    one.run_available_now()                     # drained: one empty start
+    assert len(starts) == 2 and datasets(one) == {"one0.gpkg"}
+
+    three, starts = spied("three", 3)
+    three.run_available_now(queue_rate=2)       # receives of 2, then 1
+    assert len(starts) == 2
+    assert datasets(three) == {f"three{i}.gpkg" for i in range(3)}
+
+    late, starts = spied("late", 1)
+    process_batch = late._process_batch
+
+    def spool_during_batch(batch_df, batch_id):
+        process_batch(batch_df, batch_id)
+        if batch_id == 0:
+            _write_msgs(late.messages_dir, "m1.json", [
+                {"msg_id": 1, "body": f"{URL}/raw/late1.gpkg;t;"
+                 "join_vector_tiles=false", "enqueued_ts": "2024-01-01"}])
+    late._process_batch = spool_during_batch
+    late.run_available_now()
+    assert len(starts) == 2
+    assert datasets(late) == {"late0.gpkg", "late1.gpkg"}
+
+
 @pytest.mark.parametrize("maker,batch_builder,end_col,wm_secs", [
     (
         W.tumbling_counts,
