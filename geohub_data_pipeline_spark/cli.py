@@ -1,33 +1,57 @@
-"""Offline CLI entry point (EP2 analog).
+"""Offline CLI entry point (EP2).
 
 Reference: ``/root/reference/ingest/cli/main.py:18-40`` — argparse
 (-src, -dst, -j join-tiles, -d debug) driving ``process_geo_file``
-directly with no Azure/queue.  Spark restatement: a plain batch job
-over a local (or any Hadoop-visible) source path running the same
-dataflow stages the streaming service uses per micro-batch.
+directly with no Azure/queue.  Here too: ``--src`` is one
+``processing.process_geo_file`` call, the function the streaming
+service (EP1) runs per message, and ``--raster`` is one
+``processing.process_raster`` call (it adds the ``--no-warp`` and
+``--rgb-composite`` choices the service does not expose).
 
 Usage:
     python -m geohub_data_pipeline_spark.cli \
-        --src /path/features.parquet --dst /path/out [--join-tiles]
-        [--maxzoom N] [--sf-dir DIR --demo]
+        --src /path/upload.gpkg --dst /path/out [--join-tiles]
+        [--maxzoom N] [--point-drop-rate G]
+    python -m geohub_data_pipeline_spark.cli \
+        --raster /path/dem.tif --dst /path/out [--no-warp]
+        [--overview-levels N] [--cog-dtype T] [--rgb-composite]
 
-``--demo`` runs the registry's flagship query against --sf-dir instead
-(a smoke entry that needs no geospatial input).
+Output layout under ``--dst``:
+
+* ``fgb/``       one FlatGeobuf per vector layer;
+* ``archives/``  PMTiles: one ``<stem>.<layer>.pmtiles`` per layer, or
+  one ``<stem>.pmtiles`` with ``--join-tiles`` (an ``.mbtiles`` upload
+  converts tile for tile);
+* ``cog/``       validated COGs: one per band, one composite per RGB
+  GeoTIFF (or per dataset with ``--rgb-composite``);
+* ``audits.json`` the conversion's audits — per-layer feature counts,
+  per-archive tile counts, per-COG validation — the same JSON the
+  service stores in its ``processed`` ledger row.
+
+The other modes: ``--serve`` (EP1 over a spool directory),
+``--backfill`` (EP3), ``--decode-pmtiles``, ``--curate``, and
+``--demo`` (the registry's flagship query against --sf-dir, a smoke
+entry that needs no geospatial input).
 """
 
 from __future__ import annotations
 
 import argparse
+import json
+import os
 import sys
 
+from geohub_data_pipeline_spark import processing as PROC
 from geohub_data_pipeline_spark.session import get_session
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="geohub-data-pipeline-spark")
-    ap.add_argument("--src", help="input feature parquet "
-                    "(dataset/layer/fid/geometry/srid columns)")
-    ap.add_argument("--dst", help="output directory for tiles + audits")
+    ap.add_argument("--src", help="upload to convert: any vector, "
+                    "raster, .mbtiles or archive file, or engine "
+                    "feature parquet")
+    ap.add_argument("--dst", help="output directory for artifacts + "
+                    "audits.json")
     ap.add_argument("--join-tiles", action="store_true",
                     help="multilayer joined mode (T9)")
     ap.add_argument("--maxzoom", type=int, default=None,
@@ -65,8 +89,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--raster", metavar="SRC",
                     help="raster ingest (T11): .tif/.tiff (full pixel "
                          "decode), .asc/.grd/.aig/.sgr, classic .nc, "
-                         ".nc4/.h5 (HDF5), Erdas raw (.raw/.bl), or a "
-                         ".zip/.tar/.7z of any of these -> "
+                         ".nc4/.h5 (HDF5), Erdas raw (.raw/.bl), .hgt, "
+                         ".img, a .zip/.tar/.7z of any of these, or a "
+                         "directory of them -> "
                          "WebMercatorQuad warp -> overview cascade -> "
                          "validated COGs in --dst")
     ap.add_argument("--overview-levels", type=int, default=2,
@@ -230,188 +255,12 @@ def main(argv: list[str] | None = None) -> int:
         if args.raster:
             if not args.dst:
                 ap.error("--raster requires --dst")
-            from geohub_data_pipeline_spark.operators import (
-                cogwriter as W,
-                raster as R,
-                rasterprobe as RP,
-            )
-            from geohub_data_pipeline_spark.sources import aaigrid as AG
-            from geohub_data_pipeline_spark.sources import hdf5 as H5
-            from geohub_data_pipeline_spark.sources import netcdf3 as NC
-
-            low = args.raster.lower()
-            tif_probe_paths: list[str] = []
-            if low.endswith((".zip", ".tar", ".tgz", ".gz", ".7z")):
-                # archived raster upload (ref /vsizip/ GDAL paths,
-                # ingest/utils.py:23-32)
-                from geohub_data_pipeline_spark.sources.archive import (
-                    raster_blocks_from_members,
-                    raster_georefs_from_members,
-                    read_archives,
-                )
-                members = read_archives(spark, args.raster)
-                blocks = raster_blocks_from_members(members)
-                georefs = [raster_georefs_from_members(members)]
-            elif low.endswith((".tif", ".tiff", ".gtif", ".gtiff")):
-                from geohub_data_pipeline_spark.sources import (
-                    geotiff as GTF,
-                )
-                blocks = GTF.blocks_from_geotiff(spark, args.raster)
-                georefs = [GTF.georef_from_geotiff(spark, args.raster)]
-                tif_probe_paths = [args.raster]
-            elif low.endswith(".nc"):
-                blocks = NC.blocks_from_netcdf3(spark, args.raster)
-                georefs = [NC.georef_from_netcdf3(spark, args.raster)]
-            elif low.endswith((".nc4", ".h5", ".hdf5")):
-                blocks = H5.blocks_from_netcdf4(spark, args.raster)
-                georefs = [H5.georef_from_netcdf4(spark, args.raster)]
-            elif low.endswith((".asc", ".grd", ".aig", ".sgr")):
-                blocks = AG.blocks_from_aaigrid(spark, args.raster)
-                georefs = [AG.georef_from_aaigrid(spark, args.raster)]
-            elif low.endswith((".raw", ".bl")):
-                import os as _os
-                from geohub_data_pipeline_spark.sources import (
-                    erdasraw as ER,
-                )
-                # header + companion data pair live in one directory
-                blocks = ER.blocks_from_erdas(
-                    spark, _os.path.dirname(args.raster) or ".")
-                georefs = []
-            else:                          # directory: all families
-                import os as _os
-                from geohub_data_pipeline_spark.sources import (
-                    erdasraw as ER,
-                )
-                parts, georefs = [], []
-                try:
-                    parts.append(ER.blocks_from_erdas(spark,
-                                                      args.raster))
-                except Exception:
-                    pass
-                from geohub_data_pipeline_spark.sources import (
-                    geotiff as GTF,
-                )
-                tif_probe_paths = [
-                    _os.path.join(args.raster, "*.tif"),
-                    _os.path.join(args.raster, "*.tiff")]
-                for fn, gfn, glob in (
-                        (GTF.blocks_from_geotiff,
-                         GTF.georef_from_geotiff, "*.tif"),
-                        (GTF.blocks_from_geotiff,
-                         GTF.georef_from_geotiff, "*.tiff"),
-                        (AG.blocks_from_aaigrid,
-                         AG.georef_from_aaigrid, "*.asc"),
-                        (AG.blocks_from_aaigrid,
-                         AG.georef_from_aaigrid, "*.grd"),
-                        (AG.blocks_from_aaigrid,
-                         AG.georef_from_aaigrid, "*.aig"),
-                        (AG.blocks_from_aaigrid,
-                         AG.georef_from_aaigrid, "*.sgr"),
-                        (NC.blocks_from_netcdf3,
-                         NC.georef_from_netcdf3, "*.nc"),
-                        (H5.blocks_from_netcdf4,
-                         H5.georef_from_netcdf4, "*.nc4")):
-                    try:
-                        src = _os.path.join(args.raster, glob)
-                        parts.append(fn(spark, src))
-                        georefs.append(gfn(spark, src))
-                    except Exception:
-                        continue           # no files of this family
-                if not parts:
-                    ap.error(f"no raster files under {args.raster}")
-                blocks = parts[0]
-                for p in parts[1:]:
-                    blocks = blocks.unionByName(p)
-            georef = georefs[0] if georefs else None
-            for g in georefs[1:]:
-                georef = georef.unionByName(g)
-            # auto dtype: preserve the probed source sample type per
-            # dataset (ref keeps dtype via rio-cogeo's profile,
-            # ingest/config.py:92-101); explicit --cog-dtype forces
-            dtypes_df = None
-            if args.cog_dtype == "auto" and tif_probe_paths:
-                from geohub_data_pipeline_spark.sources import (
-                    geotiff as GTF,
-                )
-                parts_d = []
-                for pp in tif_probe_paths:
-                    try:
-                        parts_d.append(
-                            GTF.dtypes_from_geotiff(spark, pp))
-                    except Exception:
-                        continue
-                if parts_d:
-                    dtypes_df = parts_d[0]
-                    for d in parts_d[1:]:
-                        dtypes_df = dtypes_df.unionByName(d)
-            cog_dtype = ("f8" if args.cog_dtype == "auto"
-                         else args.cog_dtype)
-            if georef is not None and not args.no_warp:
-                # T11 warp: the reference's cog_translate targets the
-                # WebMercatorQuad grid (ref processing.py:497-506)
-                from geohub_data_pipeline_spark.operators import (
-                    warp as WP,
-                )
-                blocks, georef = WP.warp_to_mercator(blocks, georef)
-            pyramid = R.overview_cascade(blocks, args.overview_levels)
-            # T12 auto-dispatch (ref processing.py:783-786): an RGB
-            # photometric source with >= 3 bands becomes ONE
-            # multiband composite; everything else one COG per band.
-            rgb_datasets: set[str] = set()
-            if not args.rgb_composite and tif_probe_paths:
-                for pp in tif_probe_paths:
-                    try:
-                        probes = RP.probe_rasters(
-                            spark.read.format("binaryFile")
-                            .load(pp).select("path", "content"))
-                        rgb_datasets |= {
-                            r.path.rsplit("/", 1)[-1]
-                            for r in probes.collect()
-                            if (r.photometric or 1) >= 2
-                            and (r.n_bands or 1) >= 3}
-                    except Exception:
-                        continue           # no files for this glob
-            from pyspark.sql import functions as SF
-            manifest = []
-            if args.rgb_composite:
-                manifest += W.assemble_cog_rgb_tables(
-                    pyramid, f"{args.dst}/cog",
-                    georef=georef, dtype=cog_dtype,
-                    dtypes=dtypes_df).collect()
-            elif rgb_datasets:
-                is_rgb = SF.col("dataset").isin(sorted(rgb_datasets))
-                manifest += W.assemble_cog_rgb_tables(
-                    pyramid.filter(is_rgb), f"{args.dst}/cog",
-                    georef=georef, dtype=cog_dtype,
-                    dtypes=dtypes_df).collect()
-                rest = pyramid.filter(~is_rgb)
-                if rest.limit(1).count():
-                    manifest += W.assemble_cog_tables(
-                        rest, f"{args.dst}/cog",
-                        georef=georef, dtype=cog_dtype,
-                    dtypes=dtypes_df).collect()
-            else:
-                manifest += W.assemble_cog_tables(
-                    pyramid, f"{args.dst}/cog", georef=georef,
-                    dtype=cog_dtype, dtypes=dtypes_df).collect()
-            for m in manifest:
-                with open(m.path, "rb") as f:
-                    payload = f.read()
-                probe = RP.probe_geotiff(payload)
-                # post-write validation, as the reference's
-                # cog_validate (ref processing.py:511-514)
-                check = RP.validate_cog(payload)
-                if not check["valid"]:
-                    raise SystemExit(
-                        f"invalid COG {m.path}: {check['errors']}")
-                what = (f"{m.n_bands}-band rgb"
-                        if "n_bands" in m.__fields__
-                        else f"band {m.band}")
-                print(f"cog: {m.path} {probe['width']}x{probe['height']} "
-                      f"{what}, {probe['n_overviews']} overviews, "
-                      f"{probe['compression']}, {m.file_bytes} bytes, "
-                      f"valid COG")
-            print(f"wrote {len(manifest)} COGs to {args.dst}/cog")
+            res = PROC.process_raster(
+                spark, args.raster, args.dst, warp=not args.no_warp,
+                overview_levels=args.overview_levels,
+                dtype=None if args.cog_dtype == "auto" else args.cog_dtype,
+                rgb_composite=args.rgb_composite)
+            _report(args.raster, args.dst, res)
             return 0
 
         if args.demo:
@@ -423,75 +272,45 @@ def main(argv: list[str] | None = None) -> int:
 
         if not args.src or not args.dst:
             ap.error("--src and --dst are required (or use --demo)")
-
-        from geohub_data_pipeline_spark.operators import geometry as G
-        from geohub_data_pipeline_spark.operators import tiling as TLG
-
-        from pyspark.sql import functions as F
-
-        from geohub_data_pipeline_spark.operators import pmtiles as PMT
-
-        if args.src.lower().endswith(".mbtiles"):
-            # tile-level conversion: MBTiles -> PMTiles (no re-tiling;
-            # the reference allowlists .mbtiles uploads)
-            from geohub_data_pipeline_spark.operators.mbtiles import (
-                tiles_from_mbtiles,
-            )
-            tiles = tiles_from_mbtiles(spark, args.src)
-            manifest = PMT.write_pmtiles_tables(
-                tiles, f"{args.dst}/archives",
-                payload_format="mvt").collect()
-            for m in manifest:
-                print(f"archive: {m.path} ({m.n_tiles} tiles, "
-                      f"{m.n_layers} layers, "
-                      f"z{m.min_zoom}-{m.max_zoom})")
-            print(f"converted {args.src} -> {len(manifest)} PMTiles")
-            return 0
-        else:
-            # shared extension dispatch (processing.py): archives,
-            # .gpkg/.gdb/.fgb/.geojson/.shp, else feature parquet —
-            # the same reader path the streaming service runs (EP1)
-            from geohub_data_pipeline_spark import processing as PROC
-            feats = PROC.read_vector_features(spark, args.src)
-        norm = G.normalize_features(feats)
-        if "properties" in feats.columns:
-            # attributes survive normalize via a fid join and ride
-            # into both artifacts (tippecanoe/ogr2ogr keep them)
-            norm = norm.join(
-                feats.select("dataset", "layer", "fid", "properties"),
-                ["dataset", "layer", "fid"], "left")
-        # companion .fgb artifacts, as the reference uploads next to
-        # the PMTiles (ref ingest/processing.py:405-443 dataset2pmtiles)
-        from geohub_data_pipeline_spark.sources.flatgeobuf import (
-            write_flatgeobuf_tables,
-        )
-        for m in write_flatgeobuf_tables(
-                norm, f"{args.dst}/fgb").collect():
-            print(f"fgb: {m.path} ({m.n_features} features)")
-        tiles = TLG.build_tiles(norm, maxzoom=args.maxzoom,
-                                simplify_low_zooms=True, encode="mvt",
-                                point_drop_rate=args.point_drop_rate)
-        tiles.write.mode("overwrite").partitionBy("z").parquet(
-            f"{args.dst}/tiles")
-        tiles_back = spark.read.parquet(f"{args.dst}/tiles")
-        TLG.tile_audit(tiles_back) \
-            .write.mode("overwrite").parquet(f"{args.dst}/tile_audit")
-        G.feature_count_audit(feats, norm, ["dataset", "layer"]) \
-            .write.mode("overwrite").parquet(f"{args.dst}/feature_audit")
-        manifest = PMT.write_pmtiles_tables(
-            tiles_back.withColumn("dataset", F.lit("output")),
-            f"{args.dst}/archives", payload_format="mvt").collect()
-        n = tiles_back.count()
-        for m in manifest:
-            print(f"archive: {m.path} ({m.n_tiles} tiles, "
-                  f"{m.n_layers} layers, z{m.min_zoom}-{m.max_zoom})")
-        print(f"wrote {n} tiles to {args.dst}/tiles")
+        res = PROC.process_geo_file(spark, args.src, args.dst,
+                                    join_vector_tiles=args.join_tiles,
+                                    maxzoom=args.maxzoom,
+                                    point_drop_rate=args.point_drop_rate)
+        _report(args.src, args.dst, res)
         return 0
     finally:
         # only stop a session this invocation created — in-process
         # callers (tests, notebooks) keep theirs
         if not preexisting:
             spark.stop()
+
+
+def _report(src: str, dst: str, res: dict) -> None:
+    """Print a conversion's artifacts and audits, and write the audits
+    to ``{dst}/audits.json`` (the service's ``processed`` ledger row
+    carries the same JSON)."""
+    audits = res["audits"]
+    for a in res["artifacts"]:
+        print(f"artifact: {a}")
+    for f in audits.get("feature_counts", []):
+        print(f"layer {f['dataset']}/{f['layer']}: {f['original']} -> "
+              f"{f['converted']} features ({f['status']})")
+    for a in audits.get("archives", []):
+        print(f"archive: {a['path']} ({a['n_tiles']} tiles, "
+              f"{a['n_layers']} layers)")
+    for c in audits.get("cog_validate", []):
+        print(f"cog: {c['path']} {c['bands']}, {c['bytes']} bytes, "
+              "valid COG")
+    if "cog_validate" in audits:
+        print(f"wrote {len(audits['cog_validate'])} COGs to {dst}/cog")
+    if "archives" in audits:
+        n = sum(a["n_tiles"] for a in audits["archives"])
+        print(f"wrote {n} tiles to {dst}/archives")
+    os.makedirs(dst, exist_ok=True)
+    with open(os.path.join(dst, "audits.json"), "w") as f:
+        json.dump(audits, f, sort_keys=True)
+    print(f"converted {src} -> {len(res['artifacts'])} artifacts, "
+          f"audits in {dst}/audits.json")
 
 
 if __name__ == "__main__":

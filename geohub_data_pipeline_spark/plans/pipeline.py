@@ -1178,24 +1178,27 @@ def raster_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     base = t.documents.select("doc_id")
 
+    def tif(did: int) -> tuple:
+        w = 64 + (did % 4) * 32
+        h = 64 + ((did * 3) % 3) * 32
+        epsg = [3857, 32633, 3035][did % 3]
+        levels = [W._Level(width=w, height=h, tiles={
+            (0, 0): np.zeros((W.TILE, W.TILE), dtype=np.float64)})]
+        if did % 2:
+            levels.append(W._Level(
+                width=max(1, w // 2), height=max(1, h // 2), tiles={}))
+        return did, W.geotiff_bytes(levels, epsg=epsg, compress=False)
+
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # each uncompressed tile is ~512 KB: frames of at most 256
+        # documents keep the Arrow binary column far below its 2 GB
+        # array limit
         for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 64 + (did % 4) * 32
-                h = 64 + ((did * 3) % 3) * 32
-                epsg = [3857, 32633, 3035][did % 3]
-                levels = [W._Level(width=w, height=h, tiles={
-                    (0, 0): np.zeros((W.TILE, W.TILE),
-                                     dtype=np.float64)})]
-                if did % 2:
-                    levels.append(W._Level(
-                        width=max(1, w // 2), height=max(1, h // 2),
-                        tiles={}))
-                rows.append((did, W.geotiff_bytes(
-                    levels, epsg=epsg, compress=False)))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+            for start in range(0, len(pdf), 256):
+                yield pd.DataFrame(
+                    [tif(int(did)) for did in
+                     pdf["doc_id"].iloc[start:start + 256]],
+                    columns=["path", "content"])
 
     blobs = base.mapInPandas(gen, "path long, content binary")
     return RP.probe_rasters(blobs).select(

@@ -37,9 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 VECTOR_EXTS = (".gpkg", ".gdb", ".fgb", ".geojson", ".json", ".shp",
                ".kml", ".kmz", ".gpx", ".csv", ".geojsonl",
                ".ndjson", ".geojsons", ".topojson", ".gml")
-RASTER_EXTS = (".tif", ".tiff", ".gtif", ".gtiff", ".nc", ".nc4",
-               ".h5", ".hdf5", ".asc", ".grd", ".aig", ".sgr",
-               ".raw", ".bl", ".hgt", ".img")
+TIFF_EXTS = (".tif", ".tiff", ".gtif", ".gtiff")
+RASTER_EXTS = TIFF_EXTS + (".nc", ".nc4", ".h5", ".hdf5", ".asc",
+                           ".grd", ".aig", ".sgr", ".raw", ".bl",
+                           ".hgt", ".img")
 ARCHIVE_EXTS = (".zip", ".gz", ".tar", ".tgz", ".7z")
 
 
@@ -149,7 +150,11 @@ def read_vector_features(spark: SparkSession, path: str) -> DataFrame:
 def read_raster_source(spark: SparkSession, path: str):
     """Extension-dispatched raster read -> (BLOCK rows, GEOREF rows
     or None, per-dataset dtype sidecar or None).  The OF_RASTER probe
-    analog (S6, ref processing.py:681-687)."""
+    analog (S6, ref processing.py:681-687).  A directory reads every
+    raster family it holds: one glob per extension, each through the
+    file branch below, unioned."""
+    if os.path.isdir(path):
+        return _read_raster_dir(spark, path)
     low = path.lower()
     if low.endswith(ARCHIVE_EXTS):
         from geohub_data_pipeline_spark.sources.archive import (
@@ -160,7 +165,7 @@ def read_raster_source(spark: SparkSession, path: str):
         members = read_archives(spark, path)
         return (raster_blocks_from_members(members),
                 raster_georefs_from_members(members), None)
-    if low.endswith((".tif", ".tiff", ".gtif", ".gtiff")):
+    if low.endswith(TIFF_EXTS):
         from geohub_data_pipeline_spark.sources import geotiff as GTF
         return (GTF.blocks_from_geotiff(spark, path),
                 GTF.georef_from_geotiff(spark, path),
@@ -192,6 +197,27 @@ def read_raster_source(spark: SparkSession, path: str):
     raise ValueError(f"no raster reader for {path}")
 
 
+def _read_raster_dir(spark: SparkSession, path: str):
+    """``read_raster_source`` over every raster file directly under
+    ``path``.  An Erdas pair is one read of the whole directory, so
+    its ``.bl`` data files add no glob of their own."""
+    from functools import reduce
+
+    exts = sorted({os.path.splitext(n)[1] for n in os.listdir(path)
+                   if n.lower().endswith(RASTER_EXTS)
+                   and not n.lower().endswith(".bl")})
+    if not exts:
+        raise ValueError(f"no raster files under {path}")
+    reads = [read_raster_source(spark, os.path.join(path, "*" + e))
+             for e in exts]
+
+    def union(frames):
+        frames = [f for f in frames if f is not None]
+        return reduce(DataFrame.unionByName, frames) if frames else None
+
+    return tuple(union(part) for part in zip(*reads))
+
+
 def probe_vector_chunks(feats: DataFrame) -> list[dict]:
     """One progress chunk per vector layer (ref ingest/utils.py:
     96-105: ``nvector_layers`` from the OF_VECTOR probe)."""
@@ -201,48 +227,63 @@ def probe_vector_chunks(feats: DataFrame) -> list[dict]:
             for name in sorted(layers)]
 
 
-def probe_raster_chunks(blocks: DataFrame,
-                        src_path: str | None = None) -> list[dict]:
+def probe_raster_chunks(blocks: DataFrame, src_path: str | None = None
+                        ) -> tuple[list[dict], set[str]]:
     """One chunk per subdataset, else per root band (ref
     ingest/utils.py:106-114 + the dispatch at processing.py:697,
     717-740: subdatasets each convert whole; a root raster converts
-    per band).
+    per band).  Also returns the RGB datasets: GeoTIFFs whose header
+    says RGB photometric with >= 3 bands, which convert to ONE
+    composite COG (T12, ref processing.py:783-786).
 
-    GeoTIFF fast path: band count is header metadata
+    GeoTIFF fast path: band count and photometric are header metadata
     (``probe_rasters``), so the probe never decodes tiles; other
-    formats fall back to a distinct over the block frame (one decode
-    pass — the same price the reference's OF_RASTER double-probe
-    pays, ref ingest/utils.py:96-114)."""
-    if src_path and src_path.lower().endswith(
-            (".tif", ".tiff", ".gtif", ".gtiff")):
+    formats, and directories, fall back to a distinct over the block
+    frame (one decode pass — the same price the reference's
+    OF_RASTER double-probe pays, ref ingest/utils.py:96-114)."""
+    probes = []
+    tiffs = _tiff_files(src_path) if src_path else []
+    if tiffs:
         from geohub_data_pipeline_spark.operators.rasterprobe import (
             probe_rasters,
         )
-        spark = blocks.sparkSession
-        raw = (spark.read.format("binaryFile").load(src_path)
-               .select("path", "content"))
-        n = max((int(r.n_bands or 1)
-                 for r in probe_rasters(raw).collect() if r.ok),
-                default=0)
-        if n:
-            return [{"kind": "band", "name": f"band{b}"}
-                    for b in range(1, n + 1)]
+        raw = (blocks.sparkSession.read.format("binaryFile")
+               .load(tiffs).select("path", "content"))
+        probes = [r for r in probe_rasters(raw).collect() if r.ok]
+    rgb = {os.path.basename(r.path) for r in probes
+           if (r.photometric or 1) >= 2 and (r.n_bands or 1) >= 3}
+    if probes and not os.path.isdir(src_path):
+        n = max(int(r.n_bands or 1) for r in probes)
+        return [{"kind": "band", "name": f"band{b}"}
+                for b in range(1, n + 1)], rgb
     cols = ["band"] + (["subdataset"] if "subdataset"
                        in blocks.columns else [])
     rows = blocks.select(*cols).distinct().collect()
     subs = sorted({r.subdataset for r in rows
                    if "subdataset" in cols and r.subdataset})
     if subs:
-        return [{"kind": "subdataset", "name": str(s)} for s in subs]
+        return [{"kind": "subdataset", "name": str(s)}
+                for s in subs], rgb
     bands = sorted({int(r.band) for r in rows})
-    return [{"kind": "band", "name": f"band{b}"} for b in bands]
+    return [{"kind": "band", "name": f"band{b}"} for b in bands], rgb
+
+
+def _tiff_files(path: str) -> list[str]:
+    """The GeoTIFF files a raster read of ``path`` decodes."""
+    if os.path.isdir(path):
+        return [os.path.join(path, n) for n in sorted(os.listdir(path))
+                if n.lower().endswith(TIFF_EXTS)]
+    return [path] if path.lower().endswith(TIFF_EXTS) else []
 
 
 def process_vector(spark: SparkSession, src_path: str, dst_dir: str,
                    join_vector_tiles: bool = False,
-                   maxzoom: int | None = None) -> dict:
+                   maxzoom: int | None = None,
+                   point_drop_rate: float | None = None) -> dict:
     """The T7->T8/T9->T14 chain on one vector source: normalize ->
-    .fgb artifacts -> tiles -> PMTiles archives + audits.  Returns
+    .fgb artifacts -> tiles -> PMTiles archives + audits.
+    ``point_drop_rate`` is tippecanoe's point-dropping gamma (see
+    ``tiling.build_tiles``; None keeps every point).  Returns
     {"chunks": [...], "artifacts": [paths], "audits": {...}}."""
     from pyspark.sql import functions as F
 
@@ -267,7 +308,8 @@ def process_vector(spark: SparkSession, src_path: str, dst_dir: str,
     artifacts += [m.path for m in fgb_manifest]
 
     tiles = TLG.build_tiles(norm, maxzoom=maxzoom,
-                            simplify_low_zooms=True, encode="mvt")
+                            simplify_low_zooms=True, encode="mvt",
+                            point_drop_rate=point_drop_rate)
     # joined mode (T9, ref processing.py:314-402) puts every layer in
     # ONE archive; per-layer mode (T8, ref :228-311) writes one
     # archive per layer — the writer groups by ``dataset``, so the
@@ -303,12 +345,17 @@ def process_vector(spark: SparkSession, src_path: str, dst_dir: str,
 
 def process_raster(spark: SparkSession, src_path: str, dst_dir: str,
                    warp: bool = True, overview_levels: int = 2,
-                   dtype: str | None = None) -> dict:
+                   dtype: str | None = None,
+                   rgb_composite: bool = False) -> dict:
     """The T11/T12 chain on one raster source: blocks -> mercator
     warp -> overview cascade -> validated COGs.  ``dtype=None``
     auto-preserves the probed source dtype when the reader exposes
     one (the reference keeps the source dtype through rio-cogeo, ref
-    ingest/config.py:92-101)."""
+    ingest/config.py:92-101).  An RGB GeoTIFF becomes ONE composite
+    COG and everything else one COG per band (T12);
+    ``rgb_composite`` makes every dataset a composite."""
+    from pyspark.sql import functions as F
+
     from geohub_data_pipeline_spark.operators import (
         cogwriter as W,
         raster as R,
@@ -316,22 +363,38 @@ def process_raster(spark: SparkSession, src_path: str, dst_dir: str,
     )
 
     blocks, georef, dtypes = read_raster_source(spark, src_path)
-    chunks = probe_raster_chunks(blocks, src_path)
+    chunks, rgb = probe_raster_chunks(blocks, src_path)
     if georef is not None and warp:
         from geohub_data_pipeline_spark.operators import warp as WP
         blocks, georef = WP.warp_to_mercator(blocks, georef)
     pyramid = R.overview_cascade(blocks, overview_levels)
-    manifest = W.assemble_cog_tables(
-        pyramid, f"{dst_dir}/cog", georef=georef,
-        dtype=dtype if dtype else "f8",
-        dtypes=dtypes if dtype is None else None).collect()
+    if rgb_composite:
+        composite, per_band = pyramid, None
+    elif rgb:
+        is_rgb = F.col("dataset").isin(sorted(rgb))
+        composite, per_band = pyramid.filter(is_rgb), pyramid.filter(~is_rgb)
+    else:
+        composite, per_band = None, pyramid
+    kw = {"georef": georef, "dtype": dtype if dtype else "f8",
+          "dtypes": dtypes if dtype is None else None}
+    manifest = []
+    if composite is not None:
+        manifest += W.assemble_cog_rgb_tables(
+            composite, f"{dst_dir}/cog", **kw).collect()
+    if per_band is not None:
+        manifest += W.assemble_cog_tables(
+            per_band, f"{dst_dir}/cog", **kw).collect()
     audits = []
     for m in manifest:
         # header-prefix validation: O(MB) driver memory regardless of
         # artifact size (a multi-GB COG must not be slurped whole)
         check = RP.validate_cog_path(m.path)
         audits.append({"path": m.path, "valid": bool(check["valid"]),
-                       "errors": list(check.get("errors", []))})
+                       "errors": list(check.get("errors", [])),
+                       "bands": (f"{m.n_bands}-band rgb"
+                                 if "n_bands" in m.__fields__
+                                 else f"band {m.band}"),
+                       "bytes": int(m.file_bytes)})
         if not check["valid"]:
             raise RuntimeError(
                 f"invalid COG {m.path}: {check['errors']}")
@@ -366,13 +429,26 @@ def process_geo_file(spark: SparkSession, src_path: str, dst_dir: str,
                      join_vector_tiles: bool = False,
                      maxzoom: int | None = None,
                      overview_levels: int = 2,
-                     dtype: str | None = None) -> dict:
+                     dtype: str | None = None,
+                     point_drop_rate: float | None = None) -> dict:
     """Dispatch one uploaded file down the real tree (ref
     processing.py:555-826): vector extensions -> FGB+PMTiles, raster
     extensions -> COG, .mbtiles -> PMTiles.  Raises on unreadable
     input (the service turns that into a dead-letter/error ledger
     row, ref ingest/ingest.py:184-187)."""
     low = src_path.lower().rstrip("/")
+
+    def vector():
+        return process_vector(spark, src_path, dst_dir,
+                              join_vector_tiles=join_vector_tiles,
+                              maxzoom=maxzoom,
+                              point_drop_rate=point_drop_rate)
+
+    def raster():
+        return process_raster(spark, src_path, dst_dir,
+                              overview_levels=overview_levels,
+                              dtype=dtype)
+
     if low.endswith(".mbtiles"):
         return process_mbtiles(spark, src_path, dst_dir)
     if low.endswith(ARCHIVE_EXTS):
@@ -382,29 +458,14 @@ def process_geo_file(spark: SparkSession, src_path: str, dst_dir: str,
         has_r = _archive_is_raster(src_path)
         has_v = _archive_is_vector(src_path)
         if has_r and has_v:
-            v = process_vector(spark, src_path, dst_dir,
-                               join_vector_tiles=join_vector_tiles,
-                               maxzoom=maxzoom)
-            r = process_raster(spark, src_path, dst_dir,
-                               overview_levels=overview_levels,
-                               dtype=dtype)
+            v, r = vector(), raster()
             return {"chunks": v["chunks"] + r["chunks"],
                     "artifacts": v["artifacts"] + r["artifacts"],
                     "audits": {**v["audits"], **r["audits"]}}
-        if has_r:
-            return process_raster(spark, src_path, dst_dir,
-                                  overview_levels=overview_levels,
-                                  dtype=dtype)
-        return process_vector(spark, src_path, dst_dir,
-                              join_vector_tiles=join_vector_tiles,
-                              maxzoom=maxzoom)
+        return raster() if has_r else vector()
     if low.endswith(RASTER_EXTS):
-        return process_raster(spark, src_path, dst_dir,
-                              overview_levels=overview_levels,
-                              dtype=dtype)
-    return process_vector(spark, src_path, dst_dir,
-                          join_vector_tiles=join_vector_tiles,
-                          maxzoom=maxzoom)
+        return raster()
+    return vector()
 
 
 def _archive_members_match(path: str, exts: tuple) -> bool:

@@ -38,7 +38,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from geohub_data_pipeline_spark.functions import paths as P
 
@@ -96,98 +95,6 @@ def route_messages(parsed: DataFrame) -> DataFrame:
     )
 
 
-def _ledger_rows(routed: DataFrame, cancels: DataFrame | None,
-                 n_chunks: int) -> DataFrame:
-    """Expand each routed message into its run-ledger rows."""
-    ts = F.current_timestamp()
-    dataset = P.chop_blob_url(F.col("blob_url"))
-
-    dead = routed.filter(F.col("route") == "dead_letter").select(
-        F.coalesce(F.col("blob_url"), F.concat(F.lit("msg_"), "msg_id"))
-        .alias("dataset"),
-        F.lit("error").alias("kind"),
-        F.lit(None).cast("string").alias("stage"),
-        F.lit(None).cast("int").alias("progress"),
-        F.concat(F.lit("dead-letter: unparseable message: "), F.col("body"))
-        .alias("content"),
-        ts.alias("ts"),
-    )
-    untouched = routed.filter(F.col("route") == "complete_untouched").select(
-        dataset.alias("dataset"),
-        F.lit("progress").alias("kind"),
-        F.lit("completed_untouched").alias("stage"),
-        F.lit(100).alias("progress"),
-        F.lit(None).cast("string").alias("content"),
-        ts.alias("ts"),
-    )
-    passthrough = routed.filter(F.col("route") == "passthrough").select(
-        dataset.alias("dataset"),
-        F.lit("progress").alias("kind"),
-        F.lit("copied").alias("stage"),
-        F.lit(100).alias("progress"),
-        F.lit(None).cast("string").alias("content"),
-        ts.alias("ts"),
-    )
-
-    work = routed.filter(F.col("route").isin("vector", "raster"))
-    if cancels is not None:
-        cancelled_urls = cancels.filter(F.col("cancel")).select(
-            F.col("url").alias("blob_url"))
-        cancelled = work.join(F.broadcast(cancelled_urls), "blob_url",
-                              "left_semi")
-        work = work.join(F.broadcast(cancelled_urls), "blob_url",
-                         "left_anti")
-        cancel_rows = cancelled.select(
-            dataset.alias("dataset"),
-            F.lit("progress").alias("kind"),
-            F.lit("Cancelled").alias("stage"),
-            F.lit(100).alias("progress"),
-            F.lit(None).cast("string").alias("content"),
-            ts.alias("ts"),
-        )
-    else:
-        cancel_rows = None
-
-    # downloading(0) -> downloaded(30) -> per-chunk -> processed(100)
-    chunks = work.select(
-        dataset.alias("dataset"),
-        F.explode(F.sequence(F.lit(1), F.lit(n_chunks))).alias("chunk"),
-    ).select(
-        "dataset",
-        F.lit("progress").alias("kind"),
-        F.concat(F.lit("processing chunk "), F.col("chunk").cast("string"))
-        .alias("stage"),
-        (F.lit(30) + F.expr(f"(70 * chunk) div {n_chunks}")).cast("int")
-        .alias("progress"),
-        F.lit(None).cast("string").alias("content"),
-        ts.alias("ts"),
-    )
-    endpoints = work.select(
-        dataset.alias("dataset"),
-        F.explode(F.array(
-            F.struct(F.lit("downloading").alias("stage"),
-                     F.lit(0).alias("progress")),
-            F.struct(F.lit("downloaded").alias("stage"),
-                     F.lit(30).alias("progress")),
-            F.struct(F.lit("processed").alias("stage"),
-                     F.lit(100).alias("progress")),
-        )).alias("s"),
-    ).select(
-        "dataset",
-        F.lit("progress").alias("kind"),
-        F.col("s.stage").alias("stage"),
-        F.col("s.progress").alias("progress"),
-        F.lit(None).cast("string").alias("content"),
-        ts.alias("ts"),
-    )
-
-    out = dead.unionByName(untouched).unionByName(passthrough) \
-        .unionByName(chunks).unionByName(endpoints)
-    if cancel_rows is not None:
-        out = out.unionByName(cancel_rows)
-    return out
-
-
 class CancelledIngest(Exception):
     """External cancel request arrived mid-conversion (X5/X6)."""
 
@@ -225,8 +132,9 @@ class IngestService:
     progress chunks come from the real probe
     (``layers + bands + subdatasets``, ref ingest/utils.py:87-123).
     ``simulate=True`` keeps the routing/ledger machinery but skips
-    conversions (routing tests, dry runs, demo messages whose blobs
-    don't exist).
+    the download check, the passthrough copy and the conversions,
+    each of which becomes ``n_chunks`` placeholder chunks (routing
+    tests, dry runs, demo messages whose blobs don't exist).
 
     At-least-once + idempotent (X7/K10): a retried batch re-runs its
     conversions, but artifact writes overwrite deterministic paths
@@ -270,14 +178,6 @@ class IngestService:
     # restarted query keeps its checkpointed provider choice.
     use_rocksdb_state: bool = True
 
-    def _cancels(self) -> DataFrame | None:
-        if self.cancel_dir is None:
-            return None
-        try:
-            return self.spark.read.schema(CANCEL_SCHEMA).json(self.cancel_dir)
-        except Exception:
-            return None
-
     def _out_dir(self) -> str:
         import os
 
@@ -313,12 +213,14 @@ class IngestService:
         if m.blob_url in cancelled:
             add(dataset, "progress", "Cancelled", 100)
             return rows
-        src = PROC.resolve_local_path(m.blob_url)
-        if src is None:
-            # download failure dead-letters (ref ingest.py:184-187)
-            add(dataset, "error", None, None,
-                f"download failed: {m.blob_url}")
-            return rows
+        src = None
+        if not self.simulate:
+            src = PROC.resolve_local_path(m.blob_url)
+            if src is None:
+                # download failure dead-letters (ref ingest.py:184-187)
+                add(dataset, "error", None, None,
+                    f"download failed: {m.blob_url}")
+                return rows
         # raw -> datasets rewrite names the output location.
         # The blob_url is queue-controlled input: normalize and
         # reject any path that escapes the output root ('..'
@@ -335,10 +237,12 @@ class IngestService:
                 f"{m.blob_url}")
             return rows
         if m.route == "passthrough":
-            # K9 server-side copy, for real
-            dst = os.path.join(self._out_dir(), dst_rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.copyfile(src, dst)
+            dst = None
+            if not self.simulate:
+                # K9 server-side copy, for real
+                dst = os.path.join(self._out_dir(), dst_rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                shutil.copyfile(src, dst)
             add(dataset, "progress", "copied", 100, dst)
             return rows
         add(dataset, "progress", "downloading", 0)
@@ -347,9 +251,10 @@ class IngestService:
         dst_dir = os.path.join(
             self._out_dir(), os.path.dirname(dst_rel), stem)
         try:
-            res = self._convert_with_timeout(
-                src, dst_dir, bool(m.join_vector_tiles), dataset,
-                blob_url=m.blob_url, msg_id=m.msg_id)
+            res = self._dry_run() if self.simulate else \
+                self._convert_with_timeout(
+                    src, dst_dir, bool(m.join_vector_tiles), dataset,
+                    blob_url=m.blob_url, msg_id=m.msg_id)
         except TimeoutError:
             # .timeout marker + Cancelled stage + metadata, as
             # the reference's asyncio.wait timeout branch
@@ -381,25 +286,30 @@ class IngestService:
         for a in res["artifacts"]:
             add(dataset, "artifact", None, None, a)
         add(dataset, "progress", "processed", 100,
-            json.dumps(res["audits"], sort_keys=True))
+            None if self.simulate
+            else json.dumps(res["audits"], sort_keys=True))
         return rows
 
-    def _real_ledger(self, routed: DataFrame) -> DataFrame:
-        """T13 for real: per work message, run probe -> convert ->
-        write through ``processing.process_geo_file`` and derive the
-        ledger rows from the actual probe.  The driver loop is over
-        MESSAGES (bounded by the queue's rate); each conversion is a
+    def _dry_run(self) -> dict:
+        """Simulate mode's conversion: ``n_chunks`` placeholder
+        chunks, no artifacts, no audits."""
+        return {"chunks": [{"kind": "chunk", "name": i}
+                           for i in range(1, self.n_chunks + 1)],
+                "artifacts": [], "audits": None}
+
+    def _batch_ledger(self, routed: DataFrame) -> DataFrame:
+        """T13: per work message, run probe -> convert -> write
+        through ``processing.process_geo_file`` and derive the ledger
+        rows from the actual probe (in simulate mode, from
+        ``n_chunks`` placeholder chunks).  The micro-batch is read
+        once, by one collect.  The driver loop is over MESSAGES
+        (bounded by the queue's rate); each conversion is a
         distributed Spark job.  ``max_concurrent_messages`` > 1 keeps
         that many conversions in flight at once (thread-per-message
         drivers over distributed jobs; Spark's scheduler interleaves
         their stages) — the ledger still comes out in queue order
         because the fan-out is an order-preserving map."""
-        cancelled: set[str] = set()
-        cancels = self._cancels()
-        if cancels is not None:
-            cancelled = {r.url for r in cancels.filter(F.col("cancel"))
-                         .select("url").collect()}
-
+        cancelled = self._cancelled_urls()
         msgs = routed.select("msg_id", "body", "blob_url", "route",
                              "join_vector_tiles").collect()
         n_conc = max(1, int(self.max_concurrent_messages))
@@ -424,10 +334,11 @@ class IngestService:
                 .withColumn("ts", F.current_timestamp()))
 
     def _cancelled_urls(self) -> set[str]:
-        cancels = self._cancels()
-        if cancels is None:
+        if self.cancel_dir is None:
             return set()
         try:
+            cancels = self.spark.read.schema(CANCEL_SCHEMA).json(
+                self.cancel_dir)
             return {r.url for r in cancels.filter(F.col("cancel"))
                     .select("url").collect()}
         except Exception:
@@ -504,11 +415,8 @@ class IngestService:
             raise
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        routed = route_messages(parse_messages(batch_df))
-        if self.simulate:
-            ledger = _ledger_rows(routed, self._cancels(), self.n_chunks)
-        else:
-            ledger = self._real_ledger(routed)
+        ledger = self._batch_ledger(
+            route_messages(parse_messages(batch_df)))
         (
             # Idempotent under foreachBatch's at-least-once retries:
             # the write is partitioned by batch_id and dynamic

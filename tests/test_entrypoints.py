@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from geohub_data_pipeline_spark.backfill import backfill_plan, backfill_user_ids
@@ -153,8 +155,26 @@ def test_cli_gpkg_source(spark, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "wrote" in out and "tiles" in out
-    audits = spark.read.parquet(str(tmp_path / "out" / "tile_audit"))
-    assert audits.count() > 0
+    audits = json.loads((tmp_path / "out" / "audits.json").read_text())
+    assert sum(a["n_tiles"] for a in audits["archives"]) > 0
+
+
+def test_cli_join_tiles_selects_archive_mode(spark, tmp_path, capsys):
+    """--src writes one PMTiles archive per layer by default and one
+    joined archive with --join-tiles (T8 vs T9)."""
+    from test_geopackage import _sample_gpkg
+
+    from geohub_data_pipeline_spark.cli import main
+
+    _sample_gpkg(str(tmp_path / "data.gpkg"))
+    for flags, want in (([], {"data.points.pmtiles", "data.zones.pmtiles"}),
+                        (["--join-tiles"], {"data.pmtiles"})):
+        dst = tmp_path / ("out" + "".join(flags))
+        assert main(["--src", str(tmp_path / "data.gpkg"),
+                     "--dst", str(dst), "--maxzoom", "2", *flags]) == 0
+        assert {p.name for p in (dst / "archives").iterdir()} == want
+        audits = json.loads((dst / "audits.json").read_text())
+        assert len(audits["archives"]) == len(want)
 
 
 def test_run_backfill_regenerates_missing_fgb(spark, tmp_path):
@@ -219,7 +239,7 @@ def test_cli_decode_pmtiles_roundtrip(spark, tmp_path, capsys):
         b'</Document></kml>')
     assert cli.main(["--src", str(src),
                      "--dst", str(tmp_path / "out")]) == 0
-    archive = tmp_path / "out" / "archives" / "output.pmtiles"
+    archive = tmp_path / "out" / "archives" / "demo.demo.pmtiles"
     assert archive.exists()
 
     assert cli.main(["--decode-pmtiles", str(archive),

@@ -247,10 +247,8 @@ def test_zipped_raster_upload_cli(spark, tmp_path, capsys):
     assert out.count("valid COG") == 2     # one per member dataset
 
 
-def test_auto_rgb_dispatch_cli(spark, tmp_path, capsys):
-    """T12 auto-dispatch: an RGB-photometric 3-band .tif becomes ONE
-    composite COG while a gray sibling stays per-band — no flag."""
-    from geohub_data_pipeline_spark.cli import main
+def _write_rgb_and_gray(d):
+    """An RGB-photometric 3-band rgb.tif and a 1-band gray.tif."""
     from geohub_data_pipeline_spark.operators.cogwriter import (
         _Level,
         geotiff_bytes,
@@ -261,15 +259,22 @@ def test_auto_rgb_dispatch_cli(spark, tmp_path, capsys):
         [np.pad(((np.arange(h * w) * b) % 97).reshape(h, w)
                 .astype(float), ((0, 176), (0, 166)))
          for b in (1, 2, 3)], axis=2)}
-    (tmp_path / "rgb.tif").write_bytes(geotiff_bytes(
+    (d / "rgb.tif").write_bytes(geotiff_bytes(
         [_Level(w, h, rgb_tiles)], epsg=4326,
         pixel_scale=(0.02, 0.02), origin=(6.0, 49.0)))
     gray = {(0, 0): np.pad((np.arange(h * w) % 50).reshape(h, w)
                            .astype(float), ((0, 176), (0, 166)))}
-    (tmp_path / "gray.tif").write_bytes(geotiff_bytes(
+    (d / "gray.tif").write_bytes(geotiff_bytes(
         [_Level(w, h, gray)], epsg=4326,
         pixel_scale=(0.02, 0.02), origin=(6.0, 49.0)))
 
+
+def test_auto_rgb_dispatch_cli(spark, tmp_path, capsys):
+    """T12 auto-dispatch: an RGB-photometric 3-band .tif becomes ONE
+    composite COG while a gray sibling stays per-band — no flag."""
+    from geohub_data_pipeline_spark.cli import main
+
+    _write_rgb_and_gray(tmp_path)
     rc = main(["--raster", str(tmp_path),
                "--dst", str(tmp_path / "out"),
                "--overview-levels", "1"])
@@ -278,3 +283,33 @@ def test_auto_rgb_dispatch_cli(spark, tmp_path, capsys):
     assert "3-band rgb" in out
     assert "band 1" in out                # gray stays per-band
     assert out.count("valid COG") == 2
+
+
+def test_service_rgb_geotiff_one_composite_cog(spark, tmp_path):
+    """The service runs the same T12 dispatch: a message for an RGB
+    GeoTIFF yields ONE composite COG artifact, not one per band."""
+    import json
+
+    from geohub_data_pipeline_spark.operators.rasterprobe import (
+        probe_geotiff,
+    )
+    from geohub_data_pipeline_spark.streaming.service import IngestService
+
+    raw = tmp_path / "userdata" / "u1" / "raw"
+    raw.mkdir(parents=True)
+    _write_rgb_and_gray(raw)
+    (tmp_path / "msgs").mkdir()
+    (tmp_path / "msgs" / "m.json").write_text(json.dumps(
+        {"msg_id": 1, "body": f"file://{raw}/rgb.tif;t;"
+         "join_vector_tiles=false", "enqueued_ts": "2024-01-01"}) + "\n")
+    svc = IngestService(spark=spark, messages_dir=str(tmp_path / "msgs"),
+                        ledger_dir=str(tmp_path / "ledger"),
+                        checkpoint_dir=str(tmp_path / "ckpt"),
+                        output_dir=str(tmp_path / "out"))
+    svc.run_available_now()
+    rows = svc.ledger().collect()
+    assert not [r.content for r in rows if r.kind == "error"]
+    (art,) = [r.content for r in rows if r.kind == "artifact"]
+    assert art.endswith("rgb.tif_rgb.tif")
+    with open(art, "rb") as f:
+        assert probe_geotiff(f.read())["n_bands"] == 3

@@ -173,6 +173,21 @@ def test_process_geo_file_dispatch_new_formats(spark, tmp_path):
                         for a in out["audits"]["cog_validate"])
 
 
+def test_cli_raster_hgt(spark, tmp_path, capsys):
+    """``--raster x.hgt`` goes through the same raster reader as the
+    service: one valid COG out."""
+    from geohub_data_pipeline_spark import cli
+    from geohub_data_pipeline_spark.operators import rasterprobe as RP
+
+    hgt = tmp_path / "N52E013.hgt"
+    hgt.write_bytes(_hgt_tile(65))
+    assert cli.main(["--raster", str(hgt), "--dst", str(tmp_path / "out"),
+                     "--overview-levels", "1"]) == 0
+    assert "wrote 1 COGs" in capsys.readouterr().out
+    (cog,) = (tmp_path / "out" / "cog").glob("*.tif")
+    assert RP.validate_cog_path(str(cog))["valid"]
+
+
 def test_kml_gpx_csv_archive_members(spark, tmp_path):
     """Zipped .kml/.gpx/.csv members flow through the archive source."""
     from geohub_data_pipeline_spark.sources.archive import (

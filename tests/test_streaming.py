@@ -97,6 +97,27 @@ def test_service_routes_and_ledger(service):
     assert [r.stage for r in d] == ["Cancelled"]
 
 
+def test_simulate_reads_each_message_once(service):
+    """A dry run builds its ledger with the real path's per-message
+    code, so the micro-batch is read once: the source reports as many
+    input rows as there are messages."""
+    _write_msgs(service.messages_dir, "batch1.json", [
+        {"msg_id": i, "body": f"{URL}/raw/m{i}.gpkg;t;"
+         "join_vector_tiles=false", "enqueued_ts": "2024-01-01"}
+        for i in range(3)])
+    progress = []
+    start_once = service._start_once
+
+    def spy(src):
+        q = start_once(src)
+        progress.extend(q.recentProgress)
+        return q
+    service._start_once = spy
+    service.run_available_now(queue_rate=3)
+    assert sum(p.numInputRows for p in progress) == 3
+    assert service.ledger().filter("stage = 'processed'").count() == 3
+
+
 def test_ledger_write_idempotent_on_batch_retry(service, spark):
     """foreachBatch is at-least-once: re-delivering the SAME batch_id
     must not double the ledger (dynamic partition overwrite replaces
