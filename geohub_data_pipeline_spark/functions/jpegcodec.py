@@ -64,10 +64,6 @@ for _u in range(8):
                       * np.cos((2 * _x + 1) * _u * np.pi / 16))
 
 
-def _fdct(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 def _idct(coef: np.ndarray) -> np.ndarray:
     return _C.T @ coef @ _C
 

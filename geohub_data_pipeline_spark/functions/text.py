@@ -69,11 +69,6 @@ def minhash(shingles: Column, seed: int) -> Column:
     )
 
 
-def minhash_signature(shingles: Column,
-                      n_funcs: int = MINHASH_FUNCS) -> list[Column]:
-    return [minhash(shingles, j).alias(f"mh{j}") for j in range(n_funcs)]
-
-
 def lsh_band(sig_cols: list[Column], band: int,
              n_bands: int = LSH_BANDS) -> Column:
     """Hash one band (contiguous slice) of the signature."""

@@ -198,30 +198,6 @@ def bbox_of(parsed: dict[str, Any]) -> tuple[float, float, float, float]:
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def ring_is_bowtie(ring: list[float]) -> bool:
-    """Cheap self-intersection sniff for quadrilateral 'bowties' — the
-    invalidity class the fixtures inject.  Full -makevalid needs GEOS
-    (stubbed; rows are only flagged)."""
-    if len(ring) != 10:  # 5 points (closed quad)
-        return False
-
-    def seg(i):
-        return ((ring[2 * i], ring[2 * i + 1]),
-                (ring[2 * i + 2], ring[2 * i + 3]))
-
-    def crosses(a, b):
-        (x1, y1), (x2, y2) = a
-        (x3, y3), (x4, y4) = b
-        d = (x2 - x1) * (y4 - y3) - (y2 - y1) * (x4 - x3)
-        if d == 0:
-            return False
-        t = ((x3 - x1) * (y4 - y3) - (y3 - y1) * (x4 - x3)) / d
-        u = ((x3 - x1) * (y2 - y1) - (y3 - y1) * (x2 - x1)) / d
-        return 0 < t < 1 and 0 < u < 1
-
-    return crosses(seg(0), seg(2)) or crosses(seg(1), seg(3))
-
-
 # ---------------------------------------------------------------------------
 # MakeValid-lite (pure python, no GEOS)
 #

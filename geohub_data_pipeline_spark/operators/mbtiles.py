@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import sqlite3
+import tempfile
 
 import pandas as pd
 
@@ -122,6 +123,31 @@ def write_mbtiles_tables(tiles_df, dst_dir: str):
         write_group, MANIFEST_SCHEMA)
 
 
+def _read_mbtiles_bytes(payload: bytes):
+    """``read_mbtiles`` over an in-memory archive (SQLite opens files
+    only, so the bytes go through a temp file)."""
+    fd, tmp = tempfile.mkstemp(suffix=".mbtiles")
+    try:
+        with os.fdopen(fd, "wb") as f:
+            f.write(payload)
+        return read_mbtiles(tmp)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
+def mbtiles_tile_rows(payload: bytes, dataset: str) -> list[tuple]:
+    stem = os.path.splitext(dataset)[0]
+    try:
+        meta, tiles = _read_mbtiles_bytes(payload)
+    except (sqlite3.Error, ValueError, OSError):
+        # corrupt ARCHIVE: auditable quarantine row (z/x/y=-1,
+        # n_features=-1) — never silently fewer tiles downstream
+        return [(dataset, stem, -1, -1, -1, b"", -1)]
+    layer = meta.get("name") or stem
+    return [(dataset, layer, z, x, y, tile, 0) for z, x, y, tile in tiles]
+
+
 def tiles_from_mbtiles(spark, path: str):
     """Scan ``.mbtiles`` files under ``path`` into the engine's tile
     rows (dataset, layer, z, x, y in XYZ, payload) — the input half
@@ -131,48 +157,56 @@ def tiles_from_mbtiles(spark, path: str):
     Scale: one archive = one task (SQLite is a single-file container);
     files parallelize across the binaryFile scan.
     """
-    import os
-    import tempfile
-    from collections.abc import Iterator
+    from geohub_data_pipeline_spark.sources.files import scan_files
 
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                fd, tmp = tempfile.mkstemp(suffix=".mbtiles")
-                try:
-                    with os.fdopen(fd, "wb") as f:
-                        f.write(bytes(content))
-                    meta, tiles = read_mbtiles(tmp)
-                except (sqlite3.Error, ValueError, OSError):
-                    # corrupt ARCHIVE: auditable quarantine row
-                    # (z/x/y=-1, n_features=-1) — never silently fewer
-                    # tiles downstream
-                    rows.append((dataset,
-                                 os.path.splitext(dataset)[0],
-                                 -1, -1, -1, b"", -1))
-                    continue
-                finally:
-                    if os.path.exists(tmp):
-                        os.unlink(tmp)
-                layer = meta.get("name") or os.path.splitext(dataset)[0]
-                for z, x, y, payload in tiles:
-                    rows.append((dataset, layer, z, x, y, payload, 0))
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "layer", "z", "x", "y", "payload",
-                "n_features"])
-
-    return raw.mapInPandas(
-        kernel,
+    return scan_files(
+        spark, path,
         "dataset string, layer string, z int, x int, y int, "
-        "payload binary, n_features long")
+        "payload binary, n_features long", mbtiles_tile_rows, ())
+
+
+def mbtiles_block_rows(payload: bytes, dataset: str) -> list[tuple]:
+    import numpy as np
+
+    from geohub_data_pipeline_spark.functions import jpegcodec as J
+    from geohub_data_pipeline_spark.operators.multimodal import (
+        PNG_MAGIC,
+        decode_png_gray8,
+    )
+
+    stem = os.path.splitext(dataset)[0]
+    try:
+        meta, tiles = _read_mbtiles_bytes(payload)
+    except (sqlite3.Error, ValueError, OSError):
+        # corrupt ARCHIVE: one auditable quarantine row (band=-1,
+        # level=-1, payload size as width) — never a silently shrunk
+        # raster set
+        return [(dataset, stem, -1, -1, -1, -1, len(payload), 0, [],
+                 None, 3857)]
+    layer = meta.get("name") or stem
+    maxzoom = max((z for z, _x, _y, _pl in tiles), default=0)
+    rows = []
+    for z, x, y, tile in tiles:
+        try:
+            if tile[:8] == PNG_MAGIC:
+                bands = [decode_png_gray8(tile)]
+            elif tile[:2] == b"\xff\xd8":
+                img = J.decode_baseline_jpeg(tile)
+                bands = ([img] if img.ndim == 2 else
+                         [img[:, :, b] for b in range(img.shape[2])])
+            else:
+                raise ValueError("unknown tile payload")
+        except Exception:
+            # quarantine THIS tile, loudly auditable
+            rows.append((dataset, layer, -1, maxzoom - z, x, y,
+                         len(tile), 0, [], None, 3857))
+            continue
+        for b, px in enumerate(bands, start=1):
+            rows.append((
+                dataset, layer, b, maxzoom - z, x, y,
+                int(px.shape[1]), int(px.shape[0]),
+                px.astype(np.float64).ravel().tolist(), None, 3857))
+    return rows
 
 
 def mbtiles_raster_blocks(spark, path: str):
@@ -200,77 +234,7 @@ def mbtiles_raster_blocks(spark, path: str):
     here — downstream consumers (overview cascade, COG assembly)
     shuffle on the block key exactly as for any other raster source.
     """
-    import tempfile
-    from collections.abc import Iterator
-
     from geohub_data_pipeline_spark.operators.raster import BLOCK_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
+    from geohub_data_pipeline_spark.sources.files import scan_files
 
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from geohub_data_pipeline_spark.functions import jpegcodec as J
-        from geohub_data_pipeline_spark.operators.multimodal import (
-            PNG_MAGIC,
-            decode_png_gray8,
-        )
-
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                fd, tmp = tempfile.mkstemp(suffix=".mbtiles")
-                try:
-                    with os.fdopen(fd, "wb") as f:
-                        f.write(bytes(content))
-                    meta, tiles = read_mbtiles(tmp)
-                except (sqlite3.Error, ValueError, OSError):
-                    # corrupt ARCHIVE: one auditable quarantine row
-                    # (band=-1, level=-1, payload size as width) —
-                    # never a silently shrunk raster set
-                    rows.append((dataset,
-                                 os.path.splitext(dataset)[0], -1,
-                                 -1, -1, -1, len(bytes(content)),
-                                 0, [], None, 3857))
-                    continue
-                finally:
-                    if os.path.exists(tmp):
-                        os.unlink(tmp)
-                layer = meta.get("name") or os.path.splitext(dataset)[0]
-                maxzoom = max((z for z, _x, _y, _pl in tiles),
-                              default=0)
-                for z, x, y, payload in tiles:
-                    payload = bytes(payload)
-                    try:
-                        if payload[:8] == PNG_MAGIC:
-                            bands = [decode_png_gray8(payload)]
-                        elif payload[:2] == b"\xff\xd8":
-                            img = J.decode_baseline_jpeg(payload)
-                            bands = ([img] if img.ndim == 2 else
-                                     [img[:, :, b]
-                                      for b in range(img.shape[2])])
-                        else:
-                            raise ValueError("unknown tile payload")
-                    except Exception:
-                        # quarantine THIS tile, loudly auditable
-                        rows.append((dataset, layer, -1,
-                                     maxzoom - z, x, y, len(payload),
-                                     0, [], None, 3857))
-                        continue
-                    for b, px in enumerate(bands, start=1):
-                        rows.append((
-                            dataset, layer, b, maxzoom - z, x, y,
-                            int(px.shape[1]), int(px.shape[0]),
-                            [float(v) for v in
-                             px.astype(np.float64).ravel()],
-                            None, 3857))
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "subdataset", "band", "level", "block_x",
-                "block_y", "width", "height", "pixels", "nodata",
-                "srid"])
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    return scan_files(spark, path, BLOCK_SCHEMA, mbtiles_block_rows, ())

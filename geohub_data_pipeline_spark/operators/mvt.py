@@ -164,56 +164,10 @@ def _varints_np(vals) -> bytes:
     return out.tobytes()
 
 
-def _shoelace2(pts: list[tuple[int, int]]) -> int:
-    """Twice the signed shoelace area in tile-local (y-down) coords:
-    positive = clockwise on screen, the MVT 2.1 exterior winding."""
-    a = 0
-    for (x1, y1), (x2, y2) in zip(pts, pts[1:] + pts[:1]):
-        a += x1 * y2 - x2 * y1
-    return a
-
-
-def _encode_rings(parts: list[list[tuple[int, int]]],
-                  close: bool,
-                  roles: list[bool] | None = None) -> list[int]:
-    """Command stream for multi-part lines (close=False) or rings
-    (close=True); deltas are from the running cursor across parts.
-
-    ``roles`` (rings only): True = exterior.  MVT 2.1 §4.3.3.3 keys
-    hole-attachment on winding — exterior rings MUST enclose positive
-    (screen-CW) area and interior rings negative — so each ring is
-    re-wound to its role regardless of the input WKB's winding.
-    """
-    out: list[int] = []
-    cx = cy = 0
-    for pi, pts in enumerate(parts):
-        if close and len(pts) >= 2 and pts[0] == pts[-1]:
-            pts = pts[:-1]                 # ClosePath replaces closure
-        if len(pts) < (3 if close else 2):
-            continue
-        if close and roles is not None:
-            area2 = _shoelace2(pts)
-            want_cw = roles[pi] if pi < len(roles) else True
-            if area2 != 0 and (area2 > 0) != want_cw:
-                pts = [pts[0]] + pts[:0:-1]   # reverse, keep start point
-        out.append(_cmd(MOVE_TO, 1))
-        out.append(_zigzag(pts[0][0] - cx))
-        out.append(_zigzag(pts[0][1] - cy))
-        cx, cy = pts[0]
-        out.append(_cmd(LINE_TO, len(pts) - 1))
-        for px, py in pts[1:]:
-            out.append(_zigzag(px - cx))
-            out.append(_zigzag(py - cy))
-            cx, cy = px, py
-        if close:
-            out.append(_cmd(CLOSE_PATH, 1))
-    return out
-
-
 def encode_wkb_geometry(wkb: bytes, z: int, tx: int, ty: int):
     """WKB -> (mvt_geom_type, uint64 command array) in tile-local
-    coords.  The command STREAM is bit-identical to the scalar
-    helpers above (kept for the independent-decoder tests); the
+    coords.  MVT 2.1 §4.3.3.3 keys hole attachment on winding, so
+    each ring is re-wound to its role (exterior = screen-CW); the
     transform, deltas, zigzag, and winding test are numpy-batched —
     a dense tile's million vertices encode without per-vertex
     Python."""

@@ -55,6 +55,23 @@ GEOREF_SCHEMA = (
 )
 
 
+def cut_blocks(plane: np.ndarray, dataset: str, sub: str | None,
+               band: int, nodata: float | None, srid: int
+               ) -> list[tuple]:
+    """A float64 (H, W) band -> level-0 BLOCK_SCHEMA rows, one per
+    256x256 block (edge blocks keep their clipped size) — the one
+    block cutter every raster source shares."""
+    rows = []
+    for by in range(0, plane.shape[0], BLOCK):
+        for bx in range(0, plane.shape[1], BLOCK):
+            tile = plane[by:by + BLOCK, bx:bx + BLOCK]
+            rows.append((
+                dataset, sub, band, 0, bx // BLOCK, by // BLOCK,
+                int(tile.shape[1]), int(tile.shape[0]),
+                tile.ravel().tolist(), nodata, srid))
+    return rows
+
+
 def rgb_dispatch(bands: DataFrame) -> DataFrame:
     """T12: route each (dataset, subdataset) to one multiband 'rgb'
     output or one output per band, with the reference's two rules

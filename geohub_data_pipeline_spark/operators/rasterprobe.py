@@ -59,6 +59,20 @@ def _read_values(payload: bytes, bo: str, typ: int, count: int,
     return list(struct.unpack(bo + str(count) + fmt, buf))
 
 
+def geokey_epsg(geokeys: list) -> int | None:
+    """EPSG code from a GeoKeyDirectory (tag 34735): a 4-short header
+    then (key, loc, count, value) entries; ProjectedCSType (3072)
+    wins over GeographicType (2048)."""
+    epsg = None
+    for k in range(4, len(geokeys) - 3, 4):
+        key, loc, _cnt, val = geokeys[k:k + 4]
+        if key == 3072 and loc == 0:
+            epsg = val
+        elif key == 2048 and loc == 0 and epsg is None:
+            epsg = val
+    return epsg
+
+
 def probe_geotiff(payload: bytes) -> dict:
     """Parse a (Geo)TIFF header chain into typed metadata.
 
@@ -103,17 +117,6 @@ def probe_geotiff(payload: bytes) -> dict:
         v = main.get(tag)
         return v[0] if v else default
 
-    epsg = None
-    geokeys = main.get(34735) or []
-    # GeoKeyDirectory: 4-short header then (key, loc, count, value);
-    # ProjectedCSType (3072) wins over GeographicType (2048)
-    for k in range(4, len(geokeys) - 3, 4):
-        key, loc, _cnt, val = geokeys[k:k + 4]
-        if key == 3072 and loc == 0:
-            epsg = val
-        elif key == 2048 and loc == 0 and epsg is None:
-            epsg = val
-
     scale = main.get(33550) or []
     tie = main.get(33922) or []
     return {
@@ -127,7 +130,7 @@ def probe_geotiff(payload: bytes) -> dict:
         "tiled": 322 in main,
         "tile_width": one(322), "tile_height": one(323),
         "n_overviews": len(ifds) - 1,
-        "epsg": epsg,
+        "epsg": geokey_epsg(main.get(34735) or []),
         "pixel_scale_x": scale[0] if len(scale) >= 2 else None,
         "pixel_scale_y": scale[1] if len(scale) >= 2 else None,
         "origin_x": tie[3] if len(tie) >= 6 else None,

@@ -2678,8 +2678,7 @@ def hgt_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                        + np.add.outer(7 * np.arange(n), np.arange(n))
                        ).astype(">i2")
                 name = f"N{did % 50:02d}E{did % 100:03d}.hgt"
-                parsed = HGT.parse_hgt(arr.tobytes())
-                blocks = HGT._blocks_of(name, parsed)
+                blocks = HGT.hgt_blocks(arr.tobytes(), name)
                 px_sum = int(sum(sum(b[8]) for b in blocks))
                 sw = HGT.parse_hgt_name(name)
                 s = 1.0 / (n - 1)

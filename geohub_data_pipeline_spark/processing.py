@@ -34,13 +34,25 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
+from geohub_data_pipeline_spark.sources.geotiff import dtypes_from_geotiff
+from geohub_data_pipeline_spark.sources.rasters import (
+    ERDAS_EXTS,
+    RASTER_EXTS,
+    RASTER_FORMATS,
+    TIFF_EXTS,
+    raster_blocks_from_members,
+    raster_georefs_from_members,
+    raster_format,
+)
+
 VECTOR_EXTS = (".gpkg", ".gdb", ".fgb", ".geojson", ".json", ".shp",
                ".kml", ".kmz", ".gpx", ".csv", ".geojsonl",
                ".ndjson", ".geojsons", ".topojson", ".gml")
-TIFF_EXTS = (".tif", ".tiff", ".gtif", ".gtiff")
-RASTER_EXTS = TIFF_EXTS + (".nc", ".nc4", ".h5", ".hdf5", ".asc",
-                           ".grd", ".aig", ".sgr", ".raw", ".bl",
-                           ".hgt", ".img")
 ARCHIVE_EXTS = (".zip", ".gz", ".tar", ".tgz", ".7z")
 
 
@@ -150,51 +162,33 @@ def read_vector_features(spark: SparkSession, path: str) -> DataFrame:
 def read_raster_source(spark: SparkSession, path: str):
     """Extension-dispatched raster read -> (BLOCK rows, GEOREF rows
     or None, per-dataset dtype sidecar or None).  The OF_RASTER probe
-    analog (S6, ref processing.py:681-687).  A directory reads every
-    raster family it holds: one glob per extension, each through the
-    file branch below, unioned."""
+    analog (S6, ref processing.py:681-687): a file reads through its
+    ``sources/rasters.py`` table entry, an archive's members through
+    the same entries.  A directory reads every raster family it
+    holds: one glob per extension, each through the file branch
+    below, unioned."""
     if os.path.isdir(path):
         return _read_raster_dir(spark, path)
     low = path.lower()
     if low.endswith(ARCHIVE_EXTS):
         from geohub_data_pipeline_spark.sources.archive import (
-            raster_blocks_from_members,
-            raster_georefs_from_members,
             read_archives,
         )
         members = read_archives(spark, path)
         return (raster_blocks_from_members(members),
                 raster_georefs_from_members(members), None)
-    if low.endswith(TIFF_EXTS):
-        from geohub_data_pipeline_spark.sources import geotiff as GTF
-        return (GTF.blocks_from_geotiff(spark, path),
-                GTF.georef_from_geotiff(spark, path),
-                GTF.dtypes_from_geotiff(spark, path))
-    if low.endswith(".nc"):
-        from geohub_data_pipeline_spark.sources import netcdf3 as NC
-        return (NC.blocks_from_netcdf3(spark, path),
-                NC.georef_from_netcdf3(spark, path), None)
-    if low.endswith((".nc4", ".h5", ".hdf5")):
-        from geohub_data_pipeline_spark.sources import hdf5 as H5
-        return (H5.blocks_from_netcdf4(spark, path),
-                H5.georef_from_netcdf4(spark, path), None)
-    if low.endswith((".asc", ".grd", ".aig", ".sgr")):
-        from geohub_data_pipeline_spark.sources import aaigrid as AG
-        return (AG.blocks_from_aaigrid(spark, path),
-                AG.georef_from_aaigrid(spark, path), None)
-    if low.endswith((".raw", ".bl")):
+    if low.endswith(ERDAS_EXTS):
         from geohub_data_pipeline_spark.sources import erdasraw as ER
         return (ER.blocks_from_erdas(
             spark, os.path.dirname(path) or "."), None, None)
-    if low.endswith(".hgt"):
-        from geohub_data_pipeline_spark.sources import srtmhgt as HGT
-        return (HGT.blocks_from_hgt(spark, path),
-                HGT.georef_from_hgt(spark, path), None)
-    if low.endswith(".img"):
-        from geohub_data_pipeline_spark.sources import hfa as HFA
-        return (HFA.blocks_from_hfa(spark, path),
-                HFA.georef_from_hfa(spark, path), None)
-    raise ValueError(f"no raster reader for {path}")
+    fmt = raster_format(low)
+    if fmt is None:
+        raise ValueError(f"no raster reader for {path}")
+    return (scan_files(spark, path, BLOCK_SCHEMA, fmt.blocks, fmt.errors),
+            scan_files(spark, path, GEOREF_SCHEMA, fmt.georef, fmt.errors,
+                       column=fmt.georef_column),
+            dtypes_from_geotiff(spark, path)
+            if low.endswith(TIFF_EXTS) else None)
 
 
 def _read_raster_dir(spark: SparkSession, path: str):
@@ -490,13 +484,8 @@ def _archive_members_match(path: str, exts: tuple) -> bool:
 
 
 def _archive_is_raster(path: str) -> bool:
-    return _archive_members_match(
-        path, (".tif", ".tiff", ".asc", ".grd", ".nc", ".nc4",
-               ".hgt"))
+    return _archive_members_match(path, tuple(RASTER_FORMATS))
 
 
 def _archive_is_vector(path: str) -> bool:
-    return _archive_members_match(
-        path, (".shp", ".geojson", ".json", ".gpkg", ".fgb",
-               ".kml", ".gpx", ".csv", ".topojson", ".gml",
-               ".geojsonl", ".ndjson", ".geojsons"))
+    return _archive_members_match(path, VECTOR_EXTS)

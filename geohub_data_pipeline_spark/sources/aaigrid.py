@@ -22,14 +22,16 @@ Arrow batches and the cascade re-partitions them like any raster.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK, BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 _HEADER_KEYS = {"ncols", "nrows", "xllcorner", "yllcorner", "xllcenter",
                 "yllcenter", "cellsize", "nodata_value"}
@@ -87,80 +89,35 @@ def georef_of(header: dict) -> tuple[float, float, float, float]:
     return x0, yll + nrows * cell, cell, cell
 
 
-def georef_from_aaigrid(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+# a corrupt grid: non-ASCII bytes, a bad header or a short value list
+ERRORS = (ValueError, UnicodeDecodeError)
+
+
+def _parse(payload: bytes) -> tuple[dict, np.ndarray]:
+    return parse_aaigrid(payload.decode("ascii", "strict"))
+
+
+def aaigrid_blocks(payload: bytes, dataset: str) -> list[tuple]:
+    header, arr = _parse(payload)
+    return cut_blocks(arr, dataset, None, 1,
+                      float(header.get("nodata_value", -9999.0)), 4326)
+
+
+def aaigrid_georef(payload: bytes, dataset: str) -> list[tuple]:
+    header, _ = _parse(payload)
+    return [(dataset, *georef_of(header), 4326)]
+
+
+def georef_from_aaigrid(spark: SparkSession, path: str) -> DataFrame:
     """Per-dataset georeferencing sidecar (GEOREF_SCHEMA) from .asc
     headers — consumed by ``assemble_cog_tables(georef=...)`` so COGs
     keep the grid's spatial referencing (the reference preserves it
     through GDAL; ref ingest/processing.py:469-552)."""
-    import os
-
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in GEOREF_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    header, _ = parse_aaigrid(
-                        bytes(content).decode("ascii", "strict"))
-                    ox, oy, sx, sy = georef_of(header)
-                    rows.append((dataset, ox, oy, sx, sy, srid))
-                except (ValueError, UnicodeDecodeError):
-                    continue
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    return scan_files(spark, path, GEOREF_SCHEMA, aaigrid_georef, ERRORS)
 
 
-def _blocks_of(dataset: str, header: dict, arr: np.ndarray,
-               srid: int) -> list[tuple]:
-    nodata = float(header.get("nodata_value", -9999.0))
-    nrows, ncols = arr.shape
-    rows = []
-    for by in range(0, nrows, BLOCK):
-        for bx in range(0, ncols, BLOCK):
-            tile = arr[by:by + BLOCK, bx:bx + BLOCK]
-            rows.append((
-                dataset, None, 1, 0, bx // BLOCK, by // BLOCK,
-                int(tile.shape[1]), int(tile.shape[0]),
-                tile.ravel().tolist(), nodata, srid,
-            ))
-    return rows
-
-
-def blocks_from_aaigrid(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+def blocks_from_aaigrid(spark: SparkSession, path: str) -> DataFrame:
     """Scan .asc files under ``path`` into raster block rows
-    (BLOCK_SCHEMA level 0) — ready for rgb_dispatch /
-    overview_cascade / COG assembly."""
-    import os
-
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    header, arr = parse_aaigrid(
-                        bytes(content).decode("ascii", "strict"))
-                    rows += _blocks_of(dataset, header, arr, srid)
-                except (ValueError, UnicodeDecodeError):
-                    continue               # corrupt grid: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    (BLOCK_SCHEMA level 0) — ready for the overview cascade and COG
+    assembly."""
+    return scan_files(spark, path, BLOCK_SCHEMA, aaigrid_blocks, ERRORS)

@@ -339,137 +339,3 @@ def features_from_archives(spark: SparkSession, path: str) -> DataFrame:
     return geojson_feature_rows(members) \
         .unionByName(shp, allowMissingColumns=True) \
         .unionByName(gdb, allowMissingColumns=True)
-
-
-# ---------------------------------------------------------------------------
-# Raster members -> BLOCK rows (zipped raster uploads: the reference
-# reads them through /vsizip/ GDAL paths, ref ingest/utils.py:23-32)
-# ---------------------------------------------------------------------------
-
-_RASTER_EXT_TIF = (".tif", ".tiff", ".gtif", ".gtiff")
-_RASTER_EXT_GRID = (".asc", ".grd", ".aig", ".sgr")
-_RASTER_EXT_NC4 = (".nc4", ".h5", ".hdf5")
-
-
-def raster_blocks_from_members(members: DataFrame) -> DataFrame:
-    """Expand raster archive members (GeoTIFF / AAIGrid / NetCDF-3 /
-    NetCDF-4) into BLOCK rows — the archived twin of the bare-file
-    ``blocks_from_*`` sources.  Map-side; corrupt members quarantine.
-    """
-    from geohub_data_pipeline_spark.operators.raster import BLOCK_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(members.sparkSession)
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from geohub_data_pipeline_spark.sources import aaigrid as AG
-        from geohub_data_pipeline_spark.sources import geotiff as GTF
-        from geohub_data_pipeline_spark.sources import hdf5 as H5
-        from geohub_data_pipeline_spark.sources import netcdf3 as NC
-
-        for pdf in it:
-            rows = []
-            for member, payload in pdf[["member",
-                                        "content"]].itertuples(
-                    index=False, name=None):
-                low = str(member).lower()
-                dataset = os.path.basename(str(member))
-                payload = bytes(payload)
-                try:
-                    if low.endswith(_RASTER_EXT_TIF):
-                        d = GTF.read_geotiff(payload)
-                        for band, arr in enumerate(d["bands"],
-                                                   start=1):
-                            h, w = arr.shape
-                            for by in range(0, h, 256):
-                                for bx in range(0, w, 256):
-                                    sub = arr[by:by + 256, bx:bx + 256]
-                                    rows.append((
-                                        dataset, None, band, 0,
-                                        bx // 256, by // 256,
-                                        sub.shape[1], sub.shape[0],
-                                        sub.ravel().tolist(),
-                                        d["nodata"],
-                                        d["srid"] or 4326))
-                    elif low.endswith(_RASTER_EXT_GRID):
-                        header, arr = AG.parse_aaigrid(
-                            payload.decode("ascii", "replace"))
-                        rows += AG._blocks_of(dataset, header, arr,
-                                              4326)
-                    elif low.endswith(".nc"):
-                        rows += NC.read_netcdf3_bytes(payload, dataset)
-                    elif low.endswith(_RASTER_EXT_NC4):
-                        rows += H5.read_netcdf4_bytes(payload, dataset)
-                    elif low.endswith(".hgt"):
-                        from geohub_data_pipeline_spark.sources import (
-                            srtmhgt as HGT,
-                        )
-                        rows += HGT._blocks_of(
-                            dataset, HGT.parse_hgt(payload))
-                except Exception:
-                    continue               # corrupt member: quarantine
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "subdataset", "band", "level", "block_x",
-                "block_y", "width", "height", "pixels", "nodata",
-                "srid"])
-
-    return members.mapInPandas(kernel, BLOCK_SCHEMA)
-
-
-def raster_georefs_from_members(members: DataFrame) -> DataFrame:
-    """GEOREF sidecar rows for raster archive members."""
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(members.sparkSession)
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from geohub_data_pipeline_spark.sources import aaigrid as AG
-        from geohub_data_pipeline_spark.sources import geotiff as GTF
-        from geohub_data_pipeline_spark.sources import hdf5 as H5
-        from geohub_data_pipeline_spark.sources import netcdf3 as NC
-
-        for pdf in it:
-            rows = []
-            for member, payload in pdf[["member",
-                                        "content"]].itertuples(
-                    index=False, name=None):
-                low = str(member).lower()
-                dataset = os.path.basename(str(member))
-                payload = bytes(payload)
-                try:
-                    if low.endswith(_RASTER_EXT_TIF):
-                        d = GTF.read_geotiff(payload)
-                        if d["origin"] and d["pixel_scale"]:
-                            rows.append((dataset,
-                                         float(d["origin"][0]),
-                                         float(d["origin"][1]),
-                                         float(d["pixel_scale"][0]),
-                                         float(d["pixel_scale"][1]),
-                                         int(d["srid"] or 4326)))
-                    elif low.endswith(_RASTER_EXT_GRID):
-                        header, _arr = AG.parse_aaigrid(
-                            payload.decode("ascii", "replace"))
-                        ox, oy, sx, sy = AG.georef_of(header)
-                        rows.append((dataset, ox, oy, sx, sy, 4326))
-                    elif low.endswith(".nc"):
-                        g = NC.georef_of_netcdf3(payload)
-                        if g:
-                            rows.append((dataset, *g, 4326))
-                    elif low.endswith(_RASTER_EXT_NC4):
-                        g = H5.georef_of_netcdf4(payload)
-                        if g:
-                            rows.append((dataset, *g, 4326))
-                    elif low.endswith(".hgt"):
-                        from geohub_data_pipeline_spark.sources import (
-                            srtmhgt as HGT,
-                        )
-                        g = HGT.hgt_georef(dataset, len(payload))
-                        if g is not None:
-                            rows.append((dataset, g[0], g[1],
-                                         g[2], g[2], 4326))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "origin_x", "origin_y", "pixel_sx",
-                "pixel_sy", "georef_srid"])
-
-    return members.mapInPandas(kernel, GEOREF_SCHEMA)

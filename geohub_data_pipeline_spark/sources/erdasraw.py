@@ -35,7 +35,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK, BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import BLOCK_SCHEMA, cut_blocks
 
 _FORMATS = {
     "U1": ("u1", 1), "U2": ("u1", 1), "U4": ("u1", 1),
@@ -109,36 +109,18 @@ def decode_erdas_raw(header: dict, data: bytes) -> np.ndarray:
     return np.ascontiguousarray(cube).astype(np.float64)
 
 
-def _blocks_of(dataset: str, band: int, plane: np.ndarray,
-               nodata: float, srid: int) -> list[tuple]:
-    nrows, ncols = plane.shape
-    rows = []
-    for by in range(0, nrows, BLOCK):
-        for bx in range(0, ncols, BLOCK):
-            tile = plane[by:by + BLOCK, bx:bx + BLOCK]
-            rows.append((
-                dataset, None, band, 0, bx // BLOCK, by // BLOCK,
-                int(tile.shape[1]), int(tile.shape[0]),
-                [float(v) for v in tile.ravel()], nodata, srid,
-            ))
-    return rows
-
-
-def read_erdas_pair(header_text: str, data: bytes, dataset: str,
-                    srid: int = 4326) -> list[tuple]:
+def read_erdas_pair(header_text: str, data: bytes,
+                    dataset: str) -> list[tuple]:
     """BLOCK rows (one band per layer) from a header+data pair."""
     header = parse_eir_header(header_text)
     cube = decode_erdas_raw(header, data)
     nodata = float(header.get("nodata_value", float("nan")))
-    rows: list[tuple] = []
-    for layer in range(cube.shape[0]):
-        rows += _blocks_of(dataset, layer + 1, cube[layer], nodata,
-                           srid)
-    return rows
+    return [row for band, plane in enumerate(cube, start=1)
+            for row in cut_blocks(plane, dataset, None, band, nodata,
+                                  4326)]
 
 
-def blocks_from_erdas(spark: SparkSession, path: str,
-                      srid: int = 4326) -> DataFrame:
+def blocks_from_erdas(spark: SparkSession, path: str) -> DataFrame:
     """Scan .raw headers (+ their companion data files) under ``path``
     into raster BLOCK rows.
 
@@ -176,7 +158,7 @@ def blocks_from_erdas(spark: SparkSession, path: str,
             if data is None:
                 continue                   # companion missing: skip
             try:
-                rows += read_erdas_pair(text, data, name, srid)
+                rows += read_erdas_pair(text, data, name)
             except (ValueError, OverflowError):
                 continue
         return pd.DataFrame(rows, columns=cols)

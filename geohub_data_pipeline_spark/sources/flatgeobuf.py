@@ -44,11 +44,12 @@ from __future__ import annotations
 import math
 import os
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 MAGIC = b"fgb\x03fgb\x00"
 
@@ -734,26 +735,8 @@ def features_from_fgb(spark: SparkSession, path: str) -> DataFrame:
     """Scan ``.fgb`` files under ``path`` into engine feature rows
     (same plan shape as the GeoPackage source: binaryFile scan,
     map-side parse, no shuffle)."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_fgb_bytes(bytes(content), dataset))
-                except (ValueError, struct.error, IndexError):
-                    continue               # corrupt file: quarantine
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"])
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    return scan_files(spark, path, FEATURE_SCHEMA, read_fgb_bytes,
+                      (ValueError, struct.error, IndexError))
 
 
 def write_flatgeobuf_tables(normalized: DataFrame,

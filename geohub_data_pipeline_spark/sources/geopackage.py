@@ -28,11 +28,13 @@ import os
 import sqlite3
 import struct
 import tempfile
-from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 FEATURE_SCHEMA = (
     "dataset string, layer string, fid long, geometry binary, srid int, "
@@ -202,28 +204,10 @@ def read_gpkg_bytes(content: bytes, dataset: str,
 
 def features_from_gpkg(spark: SparkSession, path: str) -> DataFrame:
     """Scan .gpkg files under ``path`` into engine feature rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_gpkg_bytes(bytes(content), dataset,
-                                                 with_wkt=True,
-                                                 with_props=True))
-                except (sqlite3.Error, ValueError, OSError):
-                    continue               # corrupt gpkg: quarantine
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"])
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    return scan_files(spark, path, FEATURE_SCHEMA,
+                      partial(read_gpkg_bytes, with_wkt=True,
+                              with_props=True),
+                      (sqlite3.Error, ValueError, OSError))
 
 
 def _norm_props(p) -> dict:

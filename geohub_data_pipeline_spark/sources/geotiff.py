@@ -31,17 +31,24 @@ files parallelize across the binaryFile scan.
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-BLOCK = 256
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.operators.rasterprobe import (
+    _read_values,
+    geokey_epsg,
+    probe_geotiff,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 
 # ---------------------------------------------------------------------------
@@ -195,10 +202,6 @@ def read_geotiff(payload: bytes) -> dict:
     "srid", "origin": (x, y) | None, "pixel_scale": (sx, sy) | None,
     "nodata"}``.  Overview IFDs are skipped (the engine rebuilds its
     own pyramid).  Raises ValueError on malformed input."""
-    from geohub_data_pipeline_spark.operators.rasterprobe import (
-        _read_values,
-    )
-
     if payload[:2] == b"II":
         bo = "<"
     elif payload[:2] == b"MM":
@@ -308,135 +311,68 @@ def read_geotiff(payload: bytes) -> dict:
     tie = tags.get(33922) or []
     origin = (tie[3], tie[4]) if len(tie) >= 6 else None
     pixel_scale = (scale[0], scale[1]) if len(scale) >= 2 else None
-    srid = None
-    geokeys = tags.get(34735) or []
-    for k in range(4, len(geokeys) - 3, 4):
-        key, loc, _cnt, val = geokeys[k:k + 4]
-        if key == 3072 and loc == 0:
-            srid = val
-        elif key == 2048 and loc == 0 and srid is None:
-            srid = val
-
     return {"bands": [full[b] for b in range(spp)],
-            "width": width, "height": height, "srid": srid,
+            "width": width, "height": height,
+            "srid": geokey_epsg(tags.get(34735) or []),
             "origin": origin, "pixel_scale": pixel_scale,
             "nodata": nodata}
 
 
 # ---------------------------------------------------------------------------
-# Spark source: BLOCK rows + GEOREF sidecar
+# Spark source: BLOCK rows + GEOREF and dtype sidecars
 # ---------------------------------------------------------------------------
+
+# every decode or header-probe failure of a corrupt or truncated file
+# (OSError: the Arrow zstd codec on a corrupt tile)
+ERRORS = (ValueError, struct.error, IndexError, zlib.error, OSError)
+
+
+def geotiff_blocks(payload: bytes, dataset: str) -> list[tuple]:
+    """BLOCK rows (one band per sample plane, level 0) of one file."""
+    d = read_geotiff(payload)
+    return [row for band, arr in enumerate(d["bands"], start=1)
+            for row in cut_blocks(arr, dataset, None, band, d["nodata"],
+                                  d["srid"] or 4326)]
+
+
+def geotiff_georef(payload: bytes, dataset: str) -> list[tuple]:
+    """GEOREF row from the ModelPixelScale/ModelTiepoint tags —
+    HEADER-ONLY (probe_geotiff): georeferencing is tag metadata, so
+    this never touches tile payloads.  Ungeoreferenced: no row."""
+    d = probe_geotiff(payload)
+    if d["origin_x"] is None or d["pixel_scale_x"] is None:
+        return []
+    return [(dataset, float(d["origin_x"]), float(d["origin_y"]),
+             float(d["pixel_scale_x"]), float(d["pixel_scale_y"]),
+             int(d["epsg"] or 4326))]
+
+
+def geotiff_dtype(payload: bytes, dataset: str) -> list[tuple]:
+    """``(dataset, dtype)`` from SampleFormat x BitsPerSample (header
+    tags alone, no pixel decode)."""
+    d = probe_geotiff(payload)
+    code = _DTYPES.get((int(d["sample_format"] or 1),
+                        int(d["bits_per_sample"] or 8)))
+    return [(dataset, code)] if code else []
+
 
 def blocks_from_geotiff(spark: SparkSession, path: str) -> DataFrame:
     """Scan .tif/.tiff/.gtif/.gtiff under ``path`` into the 256x256
     BLOCK model (one row per band-block, level 0)."""
-    from geohub_data_pipeline_spark.operators.raster import BLOCK_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    d = read_geotiff(bytes(content))
-                except (ValueError, struct.error, IndexError,
-                        zlib.error):
-                    continue               # corrupt tif: quarantine
-                for band, arr in enumerate(d["bands"], start=1):
-                    for by in range((d["height"] + BLOCK - 1) // BLOCK):
-                        for bx in range((d["width"] + BLOCK - 1)
-                                        // BLOCK):
-                            sub = arr[by * BLOCK:(by + 1) * BLOCK,
-                                      bx * BLOCK:(bx + 1) * BLOCK]
-                            rows.append((
-                                dataset, None, band, 0, bx, by,
-                                sub.shape[1], sub.shape[0],
-                                sub.ravel().tolist(), d["nodata"],
-                                d["srid"] or 4326))
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "subdataset", "band", "level", "block_x",
-                "block_y", "width", "height", "pixels", "nodata",
-                "srid"])
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    return scan_files(spark, path, BLOCK_SCHEMA, geotiff_blocks, ERRORS)
 
 
 def dtypes_from_geotiff(spark: SparkSession, path: str) -> DataFrame:
-    """Per-dataset source-dtype sidecar ``(dataset, dtype)`` read from
-    the TIFF header tags alone (SampleFormat x BitsPerSample — no
-    pixel decode).  Broadcast into COG assembly so the default output
-    PRESERVES the source sample type instead of widening to float64,
-    as the reference does through rio-cogeo's profile
+    """Per-dataset source-dtype sidecar ``(dataset, dtype)``.
+    Broadcast into COG assembly so the default output PRESERVES the
+    source sample type instead of widening to float64, as the
+    reference does through rio-cogeo's profile
     (ref /root/reference/ingest/config.py:92-101)."""
-    from geohub_data_pipeline_spark.operators.rasterprobe import (
-        probe_geotiff,
-    )
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    codes = {(1, 8): "u1", (1, 16): "u2", (1, 32): "u4",
-             (2, 8): "i1", (2, 16): "i2", (2, 32): "i4",
-             (3, 32): "f4", (3, 64): "f8"}
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    d = probe_geotiff(bytes(content))
-                except (ValueError, struct.error, IndexError):
-                    continue
-                code = codes.get((int(d["sample_format"] or 1),
-                                  int(d["bits_per_sample"] or 8)))
-                if code:
-                    rows.append((dataset, code))
-            yield pd.DataFrame(rows, columns=["dataset", "dtype"])
-
-    return raw.mapInPandas(kernel, "dataset string, dtype string")
+    return scan_files(spark, path, "dataset string, dtype string",
+                      geotiff_dtype, ERRORS)
 
 
 def georef_from_geotiff(spark: SparkSession, path: str) -> DataFrame:
-    """GEOREF sidecar rows (operators/raster.py schema) from the
-    ModelPixelScale/ModelTiepoint tags — HEADER-ONLY (probe_geotiff):
-    georeferencing is tag metadata, so this pass never touches tile
-    payloads; at scale the sidecar costs one small ranged read per
-    file, not a decode."""
-    from geohub_data_pipeline_spark.operators.rasterprobe import (
-        probe_geotiff,
-    )
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    d = probe_geotiff(bytes(content))
-                except (ValueError, struct.error, IndexError):
-                    continue
-                if d["origin_x"] is None or d["pixel_scale_x"] is None:
-                    continue               # ungeoreferenced: no row
-                rows.append((dataset, float(d["origin_x"]),
-                             float(d["origin_y"]),
-                             float(d["pixel_scale_x"]),
-                             float(d["pixel_scale_y"]),
-                             int(d["epsg"] or 4326)))
-            yield pd.DataFrame(rows, columns=[
-                "dataset", "origin_x", "origin_y", "pixel_sx",
-                "pixel_sy", "georef_srid"])
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    """GEOREF sidecar rows (operators/raster.py schema); at scale the
+    sidecar costs one small ranged read per file, not a decode."""
+    return scan_files(spark, path, GEOREF_SCHEMA, geotiff_georef, ERRORS)

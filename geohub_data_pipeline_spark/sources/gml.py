@@ -29,15 +29,12 @@ binaryFile scan fans out.
 from __future__ import annotations
 
 import json
-import os
 import re
-from collections.abc import Iterator
 from xml.etree import ElementTree as ET
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geohub_data_pipeline_spark.sources.files import scan_files
 from geohub_data_pipeline_spark.sources.shapefile import FEATURE_SCHEMA
 
 # geographic CRS whose official (urn) axis order is lat,lon
@@ -212,23 +209,5 @@ def read_gml_bytes(payload: bytes, dataset: str):
 
 def features_from_gml(spark: SparkSession, path: str) -> DataFrame:
     """Scan .gml/.xml files under ``path`` into engine feature rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_gml_bytes(bytes(content), dataset))
-                except (ET.ParseError, ValueError, TypeError, OSError):
-                    continue               # corrupt document: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    return scan_files(spark, path, FEATURE_SCHEMA, read_gml_bytes,
+                      (ET.ParseError, ValueError, TypeError, OSError))

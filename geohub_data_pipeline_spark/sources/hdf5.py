@@ -35,14 +35,17 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 SIGNATURE = b"\x89HDF\r\n\x1a\n"
 UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -454,12 +457,9 @@ def read_hdf5_datasets(payload: bytes) -> list[H5Dataset]:
 # raster-source integration (same model as sources/netcdf3.py)
 # ---------------------------------------------------------------------------
 
-def read_netcdf4_bytes(payload: bytes, dataset: str,
-                       srid: int = 4326) -> list[tuple]:
+def read_netcdf4_bytes(payload: bytes, dataset: str) -> list[tuple]:
     """BLOCK rows for every 2-D/3-D dataset (GDAL's
     subdataset-per-variable model for netCDF)."""
-    from geohub_data_pipeline_spark.sources.netcdf3 import _blocks_of
-
     rows: list[tuple] = []
     for ds in read_hdf5_datasets(payload):
         nd = len(ds.shape)
@@ -467,42 +467,23 @@ def read_netcdf4_bytes(payload: bytes, dataset: str,
             continue                       # coordinate/scalar vars
         nodata = ds.fillvalue if ds.fillvalue is not None else \
             float("nan")
-        if nd == 2:
-            rows += _blocks_of(dataset, ds.name, 1, ds.data, nodata,
-                               srid)
-        else:
-            for t in range(ds.shape[0]):
-                rows += _blocks_of(dataset, ds.name, t + 1,
-                                   ds.data[t], nodata, srid)
+        for band, plane in enumerate([ds.data] if nd == 2 else ds.data,
+                                     start=1):
+            rows += cut_blocks(plane, dataset, ds.name, band, nodata,
+                               4326)
     return rows
 
 
-def blocks_from_netcdf4(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+# a corrupt or unsupported container, a truncated chunk stream, or a
+# datatype message numpy cannot build a dtype from (TypeError)
+ERRORS = (ValueError, struct.error, KeyError, IndexError, zlib.error,
+          TypeError)
+
+
+def blocks_from_netcdf4(spark: SparkSession, path: str) -> DataFrame:
     """Scan .nc4/HDF5 files under ``path`` into raster BLOCK rows."""
-    import os
-
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += read_netcdf4_bytes(bytes(content), dataset,
-                                               srid)
-                except (ValueError, struct.error, KeyError,
-                        IndexError, zlib.error):
-                    continue               # corrupt/unsupported: skip
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    return scan_files(spark, path, BLOCK_SCHEMA, read_netcdf4_bytes,
+                      ERRORS)
 
 
 def georef_of_netcdf4(payload: bytes) -> tuple | None:
@@ -546,34 +527,14 @@ def georef_of_netcdf4(payload: bytes) -> tuple | None:
     return None
 
 
-def georef_from_netcdf4(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+def netcdf4_georef(payload: bytes, dataset: str) -> list[tuple]:
+    g = georef_of_netcdf4(payload)
+    return [(dataset, *g, 4326)] if g else []
+
+
+def georef_from_netcdf4(spark: SparkSession, path: str) -> DataFrame:
     """Per-dataset georeferencing sidecar (GEOREF_SCHEMA) for .nc4."""
-    import os
-
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in GEOREF_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    g = georef_of_netcdf4(bytes(content))
-                except (ValueError, struct.error, KeyError,
-                        IndexError, zlib.error):
-                    continue
-                if g is not None:
-                    rows.append((dataset, *g, srid))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    return scan_files(spark, path, GEOREF_SCHEMA, netcdf4_georef, ERRORS)
 
 
 # ---------------------------------------------------------------------------

@@ -43,16 +43,18 @@ of files across the cluster); per-file work is dictionary+tree parse
 
 from __future__ import annotations
 
-import os
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK, BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 _MAGIC = b"EHFA_HEADER_TAG\x00"
 
@@ -408,80 +410,45 @@ def _layer_mapinfo(parsed: dict, layer: _Entry):
             psx, psy, srid)
 
 
+# a malformed container, dictionary, entry tree or block table
+ERRORS = (ValueError, struct.error, IndexError, KeyError)
+
+
+def hfa_blocks(payload: bytes, dataset: str) -> list[tuple]:
+    """BLOCK rows, band = 1-based Eimg_Layer order; subdataset = the
+    layer name."""
+    parsed = parse_hfa(payload)
+    rows = []
+    for band, layer in enumerate(parsed["layers"], 1):
+        arr = _layer_array(parsed, layer)
+        if arr is None:
+            continue
+        g = _layer_mapinfo(parsed, layer)
+        rows += cut_blocks(arr, dataset, layer.name, band, None,
+                           g[4] if g else 0)
+    return rows
+
+
+def hfa_georef(payload: bytes, dataset: str) -> list[tuple]:
+    """GEOREF row from the first georeferenced layer (Map_Info
+    pixel-center shifted to corner origin); a layer whose Map_Info
+    does not parse is skipped."""
+    parsed = parse_hfa(payload)
+    for layer in parsed["layers"]:
+        try:
+            g = _layer_mapinfo(parsed, layer)
+        except ERRORS:
+            continue
+        if g is not None:
+            return [(dataset, *g)]
+    return []
+
+
 def blocks_from_hfa(spark: SparkSession, path: str) -> DataFrame:
-    """Scan ``.img`` files under ``path`` into engine BLOCK rows
-    (band = 1-based Eimg_Layer order)."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(
-                    str(p).removeprefix("file:"))
-                try:
-                    parsed = parse_hfa(bytes(content))
-                    for b, layer in enumerate(parsed["layers"], 1):
-                        arr = _layer_array(parsed, layer)
-                        if arr is None:
-                            continue
-                        g = _layer_mapinfo(parsed, layer)
-                        srid = g[4] if g else 0
-                        nrows, ncols = arr.shape
-                        for by in range(0, nrows, BLOCK):
-                            for bx in range(0, ncols, BLOCK):
-                                t = arr[by:by + BLOCK, bx:bx + BLOCK]
-                                rows.append((
-                                    dataset, layer.name, b, 0,
-                                    bx // BLOCK, by // BLOCK,
-                                    int(t.shape[1]), int(t.shape[0]),
-                                    t.ravel().tolist(), None, srid))
-                except (ValueError, struct.error, IndexError,
-                        KeyError):
-                    continue           # malformed file: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    """Scan ``.img`` files under ``path`` into engine BLOCK rows."""
+    return scan_files(spark, path, BLOCK_SCHEMA, hfa_blocks, ERRORS)
 
 
 def georef_from_hfa(spark: SparkSession, path: str) -> DataFrame:
-    """GEOREF sidecar rows from each file's first georeferenced
-    layer (Map_Info pixel-center shifted to corner origin)."""
-    from geohub_data_pipeline_spark.operators.raster import (
-        GEOREF_SCHEMA,
-    )
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in GEOREF_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(
-                    str(p).removeprefix("file:"))
-                try:
-                    parsed = parse_hfa(bytes(content))
-                except (ValueError, struct.error, IndexError):
-                    continue
-                for layer in parsed["layers"]:
-                    try:
-                        g = _layer_mapinfo(parsed, layer)
-                    except (ValueError, struct.error, KeyError):
-                        g = None
-                    if g is None:
-                        continue
-                    rows.append((dataset, g[0], g[1], g[2], g[3],
-                                 g[4]))
-                    break
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    """GEOREF sidecar rows, one per georeferenced file."""
+    return scan_files(spark, path, GEOREF_SCHEMA, hfa_georef, ERRORS)

@@ -28,15 +28,12 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import zipfile
-from collections.abc import Iterator
 from xml.etree import ElementTree as ET
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geohub_data_pipeline_spark.sources.files import scan_files
 from geohub_data_pipeline_spark.sources.shapefile import FEATURE_SCHEMA
 
 _KML_WKT = ('GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",'
@@ -199,48 +196,13 @@ def read_gpx_bytes(payload: bytes, dataset: str):
 
 def features_from_kml(spark: SparkSession, path: str) -> DataFrame:
     """Scan .kml/.kmz files under ``path`` into engine feature rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_kml_bytes(bytes(content), dataset))
-                except (ET.ParseError, ValueError, OSError,
-                        zipfile.BadZipFile):
-                    continue               # corrupt document: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    return scan_files(spark, path, FEATURE_SCHEMA, read_kml_bytes,
+                      (ET.ParseError, ValueError, OSError,
+                       zipfile.BadZipFile))
 
 
 def features_from_gpx(spark: SparkSession, path: str) -> DataFrame:
-    """Scan .gpx files under ``path`` into engine feature rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_gpx_bytes(bytes(content), dataset))
-                except (ET.ParseError, ValueError, TypeError, OSError):
-                    continue               # missing lat/lon attr etc.
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    """Scan .gpx files under ``path`` into engine feature rows (a
+    missing lat/lon attribute quarantines the document)."""
+    return scan_files(spark, path, FEATURE_SCHEMA, read_gpx_bytes,
+                      (ET.ParseError, ValueError, TypeError, OSError))

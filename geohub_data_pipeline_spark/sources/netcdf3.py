@@ -25,14 +25,17 @@ as GeoTIFF.  ``_FillValue``/``missing_value`` become nodata.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK, BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 _NC_TYPES = {1: ("b", 1), 2: ("c", 1), 3: (">i2", 2), 4: (">i4", 4),
              5: (">f4", 4), 6: (">f8", 8)}
@@ -163,23 +166,7 @@ def _nodata_of(attrs: dict) -> float:
     return float("nan")
 
 
-def _blocks_of(dataset: str, sub: str, band: int, plane: np.ndarray,
-               nodata: float, srid: int) -> list[tuple]:
-    nrows, ncols = plane.shape
-    rows = []
-    for by in range(0, nrows, BLOCK):
-        for bx in range(0, ncols, BLOCK):
-            tile = plane[by:by + BLOCK, bx:bx + BLOCK]
-            rows.append((
-                dataset, sub, band, 0, bx // BLOCK, by // BLOCK,
-                int(tile.shape[1]), int(tile.shape[0]),
-                [float(v) for v in tile.ravel()], nodata, srid,
-            ))
-    return rows
-
-
-def read_netcdf3_bytes(payload: bytes, dataset: str,
-                       srid: int = 4326) -> list[tuple]:
+def read_netcdf3_bytes(payload: bytes, dataset: str) -> list[tuple]:
     """BLOCK rows for every 2-D/3-D numeric variable (the GDAL
     subdataset-per-variable model)."""
     rows: list[tuple] = []
@@ -200,13 +187,9 @@ def read_netcdf3_bytes(payload: bytes, dataset: str,
             if len(ys) >= 2 and ys[1] > ys[0]:
                 arr = np.flip(arr, axis=-2)
         nodata = _nodata_of(var["attrs"])
-        if nd == 2:
-            rows += _blocks_of(dataset, var["name"], 1, arr, nodata,
-                               srid)
-        else:
-            for t in range(arr.shape[0]):
-                rows += _blocks_of(dataset, var["name"], t + 1,
-                                   arr[t], nodata, srid)
+        for band, plane in enumerate([arr] if nd == 2 else arr, start=1):
+            rows += cut_blocks(plane, dataset, var["name"], band, nodata,
+                               4326)
     return rows
 
 
@@ -246,61 +229,23 @@ def georef_of_netcdf3(payload: bytes) -> tuple | None:
     return None
 
 
-def georef_from_netcdf3(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+# a corrupt header, out-of-bounds variable data or a NetCDF-4 file
+ERRORS = (ValueError, struct.error, KeyError, IndexError)
+
+
+def netcdf3_georef(payload: bytes, dataset: str) -> list[tuple]:
+    g = georef_of_netcdf3(payload)
+    return [(dataset, *g, 4326)] if g else []
+
+
+def georef_from_netcdf3(spark: SparkSession, path: str) -> DataFrame:
     """Per-dataset georeferencing sidecar (GEOREF_SCHEMA) from .nc
     coordinate variables — consumed by
     ``assemble_cog_tables(georef=...)``."""
-    import os
-
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in GEOREF_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    g = georef_of_netcdf3(bytes(content))
-                except (ValueError, struct.error, KeyError,
-                        IndexError):
-                    continue
-                if g is not None:
-                    rows.append((dataset, *g, srid))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    return scan_files(spark, path, GEOREF_SCHEMA, netcdf3_georef, ERRORS)
 
 
-def blocks_from_netcdf3(spark: SparkSession, path: str,
-                        srid: int = 4326) -> DataFrame:
+def blocks_from_netcdf3(spark: SparkSession, path: str) -> DataFrame:
     """Scan .nc files under ``path`` into raster BLOCK rows."""
-    import os
-
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += read_netcdf3_bytes(bytes(content), dataset,
-                                               srid)
-                except (ValueError, struct.error, KeyError,
-                        IndexError):
-                    continue               # NetCDF-4 / corrupt: skip
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    return scan_files(spark, path, BLOCK_SCHEMA, read_netcdf3_bytes,
+                      ERRORS)

@@ -25,14 +25,17 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geohub_data_pipeline_spark.operators.raster import BLOCK, BLOCK_SCHEMA
+from geohub_data_pipeline_spark.operators.raster import (
+    BLOCK_SCHEMA,
+    GEOREF_SCHEMA,
+    cut_blocks,
+)
+from geohub_data_pipeline_spark.sources.files import scan_files
 
 _NAME_RE = re.compile(r"^([NS])(\d{1,2})([EW])(\d{1,3})", re.IGNORECASE)
 _NODATA = -32768.0
@@ -59,77 +62,31 @@ def parse_hgt(payload: bytes) -> np.ndarray:
             .reshape(n, n).astype(np.float64))
 
 
-def hgt_georef(name: str, nbytes: int):
-    """(origin_x, origin_y, pixel_s) for one tile from its NAME and
-    byte count, or None — the pixel-is-point half-sample shift in one
-    place (used by the bare-file source and the archive-member
-    kernel)."""
-    sw = parse_hgt_name(name)
+def hgt_blocks(payload: bytes, dataset: str) -> list[tuple]:
+    return cut_blocks(parse_hgt(payload), dataset, None, 1, _NODATA, 4326)
+
+
+def hgt_georef(nbytes: int, dataset: str) -> list[tuple]:
+    """GEOREF row from the tile NAME + byte count: top-left
+    pixel-corner origin (lon_sw - s/2, lat_sw + 1 + s/2) with sample
+    spacing s = 1/(n-1) (the pixel-is-point half-sample shift); no
+    row for a misnamed or non-square tile."""
+    nbytes = int(nbytes)
+    sw = parse_hgt_name(dataset)
     n = int(round((nbytes // 2) ** 0.5))
     if sw is None or n < 2 or n * n * 2 != nbytes:
-        return None
+        return []
     s = 1.0 / (n - 1)
-    return sw[0] - s / 2.0, sw[1] + 1.0 + s / 2.0, s
-
-
-def _blocks_of(dataset: str, arr: np.ndarray) -> list[tuple]:
-    rows = []
-    nrows, ncols = arr.shape
-    for by in range(0, nrows, BLOCK):
-        for bx in range(0, ncols, BLOCK):
-            tile = arr[by:by + BLOCK, bx:bx + BLOCK]
-            rows.append((
-                dataset, None, 1, 0, bx // BLOCK, by // BLOCK,
-                int(tile.shape[1]), int(tile.shape[0]),
-                tile.ravel().tolist(), _NODATA, 4326,
-            ))
-    return rows
+    return [(dataset, sw[0] - s / 2.0, sw[1] + 1.0 + s / 2.0, s, s, 4326)]
 
 
 def blocks_from_hgt(spark: SparkSession, path: str) -> DataFrame:
     """Scan .hgt files under ``path`` into raster block rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += _blocks_of(dataset, parse_hgt(bytes(content)))
-                except ValueError:
-                    continue               # truncated tile: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, BLOCK_SCHEMA)
+    return scan_files(spark, path, BLOCK_SCHEMA, hgt_blocks, (ValueError,))
 
 
 def georef_from_hgt(spark: SparkSession, path: str) -> DataFrame:
-    """GEOREF sidecar from the tile NAME + byte count: top-left
-    pixel-corner origin (lon_sw - s/2, lat_sw + 1 + s/2) with sample
-    spacing s = 1/(n-1) (pixel-is-point half-sample shift)."""
-    from geohub_data_pipeline_spark.operators.raster import GEOREF_SCHEMA
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "length"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in GEOREF_SCHEMA.split(", ")]
-        for pdf in it:
-            rows = []
-            for p, length in zip(pdf["path"], pdf["length"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                g = hgt_georef(dataset, int(length))
-                if g is None:
-                    continue
-                rows.append((dataset, g[0], g[1], g[2], g[2], 4326))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, GEOREF_SCHEMA)
+    """GEOREF sidecar from each tile's name and ``length`` — the scan
+    never reads the samples."""
+    return scan_files(spark, path, GEOREF_SCHEMA, hgt_georef, (),
+                      column="length")

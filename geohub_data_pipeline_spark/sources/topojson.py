@@ -25,14 +25,12 @@ the decoded table.
 from __future__ import annotations
 
 import json
-import os
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geohub_data_pipeline_spark.sources.files import scan_files
 from geohub_data_pipeline_spark.sources.shapefile import FEATURE_SCHEMA
 
 
@@ -142,24 +140,5 @@ def read_topojson_bytes(payload: bytes, dataset: str):
 
 def features_from_topojson(spark: SparkSession, path: str) -> DataFrame:
     """Scan .topojson files under ``path`` into engine feature rows."""
-    from geohub_data_pipeline_spark.session import ship_package
-    ship_package(spark)
-
-    raw = (spark.read.format("binaryFile").load(path)
-           .select("path", "content"))
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["dataset", "layer", "fid", "geometry", "srid",
-                "crs_wkt", "properties"]
-        for pdf in it:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                dataset = os.path.basename(str(p).removeprefix("file:"))
-                try:
-                    rows += list(read_topojson_bytes(bytes(content),
-                                                     dataset))
-                except (ValueError, KeyError, TypeError, IndexError):
-                    continue               # corrupt topology: quarantine
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw.mapInPandas(kernel, FEATURE_SCHEMA)
+    return scan_files(spark, path, FEATURE_SCHEMA, read_topojson_bytes,
+                      (ValueError, KeyError, TypeError, IndexError))

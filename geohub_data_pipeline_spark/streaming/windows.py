@@ -30,17 +30,6 @@ def tumbling_counts(events: DataFrame, ts_col: str = "ts",
     )
 
 
-def sliding_counts(events: DataFrame, ts_col: str = "ts",
-                   duration: str = "1 hour", slide: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), duration, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_stats(events: DataFrame, ts_col: str = "ts",
                   gap: str = "10 minutes",
                   watermark: str = "30 minutes") -> DataFrame:
@@ -51,13 +40,6 @@ def session_stats(events: DataFrame, ts_col: str = "ts",
         .select("user_id", F.col("sw.start").alias("session_start"),
                 F.col("sw.end").alias("session_end"), "n_events")
     )
-
-
-def dedup_events(events: DataFrame, id_col: str = "event_id",
-                 ts_col: str = "ts", watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once-per-id dedup within the watermark."""
-    return events.withWatermark(ts_col, watermark).dropDuplicates(
-        [id_col, ts_col])
 
 
 def cancel_stream_join(messages: DataFrame, cancels: DataFrame,
